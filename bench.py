@@ -100,13 +100,13 @@ def bench_frontier(spark, n_urls: int = 12_000_000, budget: int = 200, salt: int
         .unionByName(
             # half the seen set actually overlaps the frontier's hash space
             synth_frontier(spark, n_urls // 4).select(
-                url_hash(canon_url(F.col("url"), percent_decode=False)).alias("url_hash")
+                url_hash(canon_url(F.col("url"))).alias("url_hash")
             )
         )
     )
     t0 = time.monotonic()
     keyed = fr.select(
-        canon_url(F.col("url"), percent_decode=False).alias("url_canon"),
+        canon_url(F.col("url")).alias("url_canon"),
         "depth",
         "inlinks",
     ).select("url_canon", "depth", "inlinks", url_hash(F.col("url_canon")).alias("url_hash"),

@@ -70,8 +70,8 @@ def test_no_single_partition_windows(spark, sf_dir):
 
 
 def test_frontier_canon_native_for_percent_free(spark):
-    """The frontier-expand key derivation must keep %-free URLs fully
-    JVM-side: the only Python stage in the plan is the escaped branch."""
+    """The frontier-expand key derivation runs no Python stage at all:
+    canonicalization, percent step included, is native."""
     from web_scraper_spark.frontier.engine import _with_keys
 
     df = spark.createDataFrame(
@@ -80,7 +80,7 @@ def test_frontier_canon_native_for_percent_free(spark):
     keyed = _with_keys(df, 16)
     plan = _plan(keyed)
     n_python = plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
-    assert n_python == 1  # exactly the Contains('%') branch
+    assert n_python == 0
     assert keyed.filter(F.col("url_canon").isNull()).count() == 0
 
 

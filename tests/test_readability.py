@@ -83,9 +83,11 @@ def test_duckdb_twin_on_punctuated_text(spark):
         (1, "brrr pfft tsk"),
         (2, "Multi   space\ttext. And? More!!"),
         (3, ""),
+        (4, None),  # NULL text scores as empty text on both engines
     ]
     df = readability.readability_scores(_docs(spark, rows))
     sdata = sorted(map(tuple, df.collect()))
+    assert sdata[4][1:] == sdata[3][1:] and sdata[4][1] == 0
     con = duckdb.connect()
     con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
     odata = sorted(map(tuple, con.execute(readability.readability_scores_sql()).fetchall()))

@@ -102,7 +102,7 @@ def test_parsed_locs_seed_the_frontier(spark):
     seeds = (
         sitemap_entries(df)
         .where(F.col("kind") == "url")
-        .select(canon_url(F.col("loc"), percent_decode=False).alias("url_canon"))
+        .select(canon_url(F.col("loc")).alias("url_canon"))
         .select("url_canon", url_hash(F.col("url_canon")).alias("url_hash"))
         .collect()
     )

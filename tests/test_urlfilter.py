@@ -82,6 +82,31 @@ def test_duckdb_twin_on_planted(spark):
     assert sdata == odata
 
 
+def test_query_string_media_url_twin(spark):
+    """The extension comes from the path alone: a query string or fragment
+    after a media file must not hide it, and a media name inside the query
+    must not lend it one — on both engines."""
+    urls = [
+        "https://h5.example/pic.jpg?w=200",
+        "https://h5.example/a/clip.MP4#t=10",
+        "https://h5.example/a/page.html?img=x.jpg",
+        "https://h5.example/a/page?img=x.jpg",
+    ]
+    df = uf.url_filter(_urls(spark, urls))
+    out = {r["url"]: r for r in df.collect()}
+    assert out["https://h5.example/pic.jpg?w=200"]["disposition"] == "media_extension"
+    assert out["https://h5.example/pic.jpg?w=200"]["extension"] == "jpg"
+    assert out["https://h5.example/a/clip.MP4#t=10"]["disposition"] == "media_extension"
+    assert out["https://h5.example/a/page.html?img=x.jpg"]["extension"] == "html"
+    assert out["https://h5.example/a/page?img=x.jpg"]["extension"] == ""
+    assert out["https://h5.example/a/page?img=x.jpg"]["disposition"] == "keep"
+    con = duckdb.connect()
+    con.register("planted", pd.DataFrame({"url": urls}))
+    odata = sorted(map(tuple, con.execute(
+        uf.url_filter_sql("SELECT url FROM planted")).fetchall()))
+    assert sorted(map(tuple, df.collect())) == odata
+
+
 def test_plan_is_scan_only(spark):
     df = uf.url_filter(_urls(spark, ["https://h5.example/a/b.html"]))
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -20,10 +20,14 @@ min(f, cap)²/2 pairs, so hub pages cannot explode the pair space; the
 cap, like the LSH bucket cap, is counted and reported by the caller's
 cap audit at production scale.
 
-Plan shape at 100 TB: one distinct on (src, dst), one src-partitioned
-rank window riding that shuffle, a self-join co-partitioned on src (no
-extra exchange beyond the join's own), and one map-side-combined count
-on the pair key. Only (src, dst) string pairs ever shuffle.
+Plan shape at 100 TB: one distinct on (src, dst), then a src-partitioned
+rank window. The window does NOT ride the distinct's shuffle: that one is
+hash-partitioned on (src, dst), so Catalyst inserts a second exchange on
+src, with a partial top-``fanout_cap`` limit per src before it so at most
+the cap per src and input partition crosses it. The self-join reuses that
+src exchange on both sides (no exchange of its own), then one
+map-side-combined count on the pair key. Only (src, dst) string pairs
+ever shuffle.
 """
 
 from __future__ import annotations
@@ -47,6 +51,7 @@ def co_citation(
     linking BOTH targets (each source's target list capped at
     ``fanout_cap`` in dst order first).
     """
+    # the distinct shuffles on (src, dst), so this window adds an exchange on src
     w = Window.partitionBy("src").orderBy("dst")
     ranked = (
         links.select("src", "dst")

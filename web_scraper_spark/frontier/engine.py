@@ -113,10 +113,10 @@ class RoundResult:
 def _with_keys(df: DataFrame, n_buckets: int) -> DataFrame:
     """Attach url_canon / url_hash / bucket / host derived columns.
 
-    Canonicalization is native-first (urls.with_canon): the Arrow UDF
-    only ever sees URLs containing '%' — on the synthetic corpus (and
-    most real link graphs) that is zero rows, so the north-rule metric's
-    inner loop is pure whole-stage codegen."""
+    Canonicalization (urls.with_canon) is one native projection with no
+    Python stage; only URLs containing '%' enter its interpreted
+    percent-escape lambda, so the keying of %-free links stays in
+    whole-stage codegen."""
     return (
         with_canon(df, "url", "url_canon")
         .withColumn("url_hash", url_hash(F.col("url_canon")))
@@ -216,8 +216,9 @@ def seed_frontier_from_sitemaps(
 
 
 def prepare_pages(pages: DataFrame) -> DataFrame:
-    """Key the stored pages table by canonical URL (computed once, outside
-    the round loop — at scale this is a materialized column of the table)."""
+    """Key the stored pages table by canonical URL. The result is lazy:
+    every round's fetch join re-derives the key over the whole table (at
+    scale this would be a materialized column of the table)."""
     return with_canon(pages.select("url", "html"), "url", "url_canon").select(
         "url_canon", "html"
     )

@@ -45,7 +45,8 @@ SCORE_THRESHOLD = 50  # drop when the summed word score reaches this
 MEDIA_EXTENSIONS = ["jpg", "jpeg", "png", "gif", "mp3", "mp4", "zip", "exe"]
 
 HOST_RE = r"^[a-z]+://([^/:]+)"
-EXT_RE = r"\.([a-z0-9]+)$"  # applied to the case-folded path
+QUERY_FRAG_RE = r"[?#].*$"
+EXT_RE = r"\.([a-z0-9]+)$"  # applied to the case-folded path, query/fragment stripped
 WORD_SPLIT_RE = r"[^a-z0-9]+"
 
 
@@ -84,8 +85,9 @@ def url_filter(urls: DataFrame) -> DataFrame:
     host = F.regexp_extract(lurl, HOST_RE, 1)
     path = F.regexp_replace(lurl, HOST_RE, "")
     # extension from the PATH, not the raw url: a bare-domain URL must
-    # not match its TLD as a file extension
-    ext = F.regexp_extract(path, EXT_RE, 1)
+    # not match its TLD as a file extension, and '/pic.jpg?w=200' must
+    # not hide its extension behind the query string
+    ext = F.regexp_extract(F.regexp_replace(path, QUERY_FRAG_RE, ""), EXT_RE, 1)
     words = F.filter(
         F.split(path, WORD_SPLIT_RE), lambda x: F.length(x) > 0
     )
@@ -120,7 +122,9 @@ def url_filter_sql(urls_cte: str) -> str:
             SELECT url,
                    regexp_extract(lurl, '{HOST_RE}', 1) AS host,
                    regexp_extract(
-                       regexp_replace(lurl, '{HOST_RE}', ''),
+                       regexp_replace(
+                           regexp_replace(lurl, '{HOST_RE}', ''),
+                           '{QUERY_FRAG_RE}', ''),
                        '{EXT_RE}', 1) AS extension,
                    {score} AS url_score
             FROM low

@@ -65,7 +65,8 @@ def readability_scores(docs: DataFrame) -> DataFrame:
     Returns (doc_id, n_words, n_sentences, n_syllables,
     words_per_sentence, syllables_per_word, flesch, fk_grade).
     """
-    low = F.lower(clean_text(F.col("text")))
+    # NULL text scores as empty text; the DuckDB twin coalesces identically
+    low = F.lower(clean_text(F.coalesce(F.col("text"), F.lit(""))))
     tok = tokens(low)
     n_words = F.size(tok).cast("bigint")
     n_sentences = F.greatest(
@@ -102,7 +103,7 @@ def readability_scores(docs: DataFrame) -> DataFrame:
 
 def readability_scores_sql() -> str:
     """DuckDB value-exact twin of :func:`readability_scores`."""
-    low = f"lower({clean_text_sql('text')})"
+    low = "lower(" + clean_text_sql("coalesce(text, '')") + ")"
     tok = tokens_sql(low)
     return f"""
         WITH base AS (

@@ -1649,19 +1649,19 @@ FOCUSED_ORACLE = f"""
 def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC 3986 URL canonicalization (urls.py::with_canon — the north
     rule's normalize step ahead of the xxhash64 seen-set) over a
-    deterministic synthetic URL population exercising every native rule:
+    deterministic synthetic URL population exercising every rule:
     scheme/host case-fold, default-port strip (:80/:443, non-default
     kept), fragment strip, duplicate-slash collapse, empty-path → '/',
-    query preservation, and non-absolute passthrough. The oracle runs
-    urls.canon_url_sql — the regexp-for-regexp DuckDB twin of the native
-    Catalyst chain; the %-escape branch receives zero rows here and is
-    property-tested against canon_url_py in tests/test_urls.py."""
+    query preservation, percent escapes (unreserved decoded, others
+    upper-cased, stray '%' kept, in path and query) and non-absolute
+    passthrough. The whole chain is native Catalyst, no Python stage; the
+    oracle runs urls.canon_url_sql, its regexp-for-regexp DuckDB twin."""
     from web_scraper_spark.urls import with_canon
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     h = (F.col("o_custkey") % 20).cast("string")
     k = (F.col("o_orderkey") % 50).cast("string")
-    case = F.col("o_orderkey") % 8
+    case = F.col("o_orderkey") % 9
     url = (
         F.when(case == 0, F.concat(F.lit("http://site"), h, F.lit(".example/p/"), k))
         .when(case == 1, F.concat(F.lit("HTTP://SITE"), h, F.lit(".EXAMPLE/P/"), k))
@@ -1670,13 +1670,14 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(case == 4, F.concat(F.lit("https://site"), h, F.lit(".example:8443/p/"), k))
         .when(case == 5, F.concat(F.lit("http://site"), h, F.lit(".example")))
         .when(case == 6, F.concat(F.lit("http://site"), h, F.lit(".example//a//"), k, F.lit("?q=1#frag")))
+        .when(case == 7, F.concat(F.lit("https://site"), h, F.lit(".example/%7e"), k, F.lit("/%2f%c3%a9%zz%%41%2541?q=%7E%20#%41")))
         .otherwise(F.concat(F.lit("relative/p/"), k))
     )
     return with_canon(orders.select(url.alias("url"))).distinct()
 
 
 CANON_URLS_CTE = """
-    SELECT CASE o_orderkey % 8
+    SELECT CASE o_orderkey % 9
              WHEN 0 THEN 'http://site' || CAST(o_custkey % 20 AS VARCHAR)
                         || '.example/p/' || CAST(o_orderkey % 50 AS VARCHAR)
              WHEN 1 THEN 'HTTP://SITE' || CAST(o_custkey % 20 AS VARCHAR)
@@ -1692,6 +1693,9 @@ CANON_URLS_CTE = """
              WHEN 6 THEN 'http://site' || CAST(o_custkey % 20 AS VARCHAR)
                         || '.example//a//' || CAST(o_orderkey % 50 AS VARCHAR)
                         || '?q=1#frag'
+             WHEN 7 THEN 'https://site' || CAST(o_custkey % 20 AS VARCHAR)
+                        || '.example/%7e' || CAST(o_orderkey % 50 AS VARCHAR)
+                        || '/%2f%c3%a9%zz%%41%2541?q=%7E%20#%41'
              ELSE 'relative/p/' || CAST(o_orderkey % 50 AS VARCHAR)
            END AS url
     FROM orders

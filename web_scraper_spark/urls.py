@@ -3,29 +3,28 @@ percent-decode, host lowercasing; xxhash64 dedup keys).
 
 The reference deduplicates on *exact* URL strings with no normalization
 (SURVEY.md F1, CrawlPaperTuoiTre.py:101-103); the engine canonicalizes
-first so equivalent spellings collapse. Two implementations, kept in
-lock-step by tests/test_urls.py (property-based):
+first so equivalent spellings collapse. Three implementations, kept in
+lock-step by tests/test_urls.py (property-based) and the
+``url_canonicalize`` oracle:
 
 - :func:`canon_url_py` — pure-Python, used by the sequential simulator
-  and inside the vectorized pandas UDF.
-- :func:`canon_url` — a Column expression. The structural normalization
-  (scheme/host lowercase, default-port strip, fragment strip, empty-path
-  → '/', duplicate-slash collapse) is pure native Catalyst; the
-  percent-decode of unreserved characters is the one step native SQL
-  cannot express, so it runs as an Arrow-batched pandas UDF *only when*
-  ``percent_decode=True`` (URLs with no ``%`` never need it — callers on
-  the hot path can pre-split on ``contains('%')`` and union, keeping the
-  overwhelmingly common case 100% JVM-side codegen).
+  and as the tests' reference.
+- :func:`canon_url` — a native Column expression, no Python stage. The
+  structural normalization (scheme/host lowercase, default-port strip,
+  fragment strip, empty-path → '/', duplicate-slash collapse) is plain
+  Catalyst; the percent step (decode unreserved ``%XX``, upper-case the
+  other escapes) splits the path+query on '%' and maps each escape
+  through a 66-entry literal map. Its array lambda is interpreted, so it
+  sits behind ``contains('%')`` and %-free URLs stay in codegen.
+- :func:`canon_url_sql` — the DuckDB twin of :func:`canon_url`.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 _UNRESERVED = set(
@@ -71,31 +70,38 @@ def canon_url_py(url: str) -> str:
     return f"{scheme}://{auth}{rest}"
 
 
-def _canon_fn(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: canon_url_py(u) if u is not None else None)
+# unreserved octet (upper-case hex) -> its character: the 66 escapes the
+# percent step decodes; every other %XX is only upper-cased
+_UNRESERVED_BY_HEX = {f"{ord(ch):02X}": ch for ch in sorted(_UNRESERVED)}
 
 
-_canon_udf_cache = None
+def _pct_norm_col(rest: Column) -> Column:
+    """Native twin of ``_PCT_RE.sub(_pct_norm, rest)`` over the pieces of
+    ``split(rest, '%')``. The first piece is the text before any '%' and
+    stays as is. Each later one followed a '%': if it starts with two hex
+    digits they are the escape, decoded through the unreserved map or else
+    upper-cased; otherwise the '%' is kept verbatim. Hex digits are never
+    '%', so this equals the regex's non-overlapping left-to-right scan.
+    The array lambda is interpreted, so %-free strings skip it behind
+    ``contains('%')``."""
+    decode = F.create_map(*[F.lit(x) for kv in _UNRESERVED_BY_HEX.items() for x in kv])
+
+    def piece(p: Column, i: Column) -> Column:
+        hx = F.upper(F.substring(p, 1, 2))
+        esc = F.coalesce(F.try_element_at(decode, hx), F.concat(F.lit("%"), hx))
+        return (
+            F.when(i == 0, p)
+            .when(p.rlike("^[0-9A-Fa-f]{2}"), F.concat(esc, p.substr(F.lit(3), F.length(p))))
+            .otherwise(F.concat(F.lit("%"), p))
+        )
+
+    pieces = F.transform(F.split(rest, "%", -1), piece)
+    return F.when(rest.contains("%"), F.array_join(pieces, "")).otherwise(rest)
 
 
-def _canon_udf():
-    # built lazily: pandas_udf registration needs an active session
-    global _canon_udf_cache
-    if _canon_udf_cache is None:
-        from pyspark.sql.types import StringType
-
-        _canon_udf_cache = pandas_udf(_canon_fn, StringType())
-    return _canon_udf_cache
-
-
-def canon_url(col: Column, percent_decode: bool = True) -> Column:
-    """Canonicalize a URL column.
-
-    percent_decode=False gives the all-native expression chain (identical
-    output for URLs containing no '%' escapes — verified by property test).
-    """
-    if percent_decode:
-        return _canon_udf()(col)
+def canon_url(col: Column) -> Column:
+    """Canonicalize a URL column: the native Catalyst twin of
+    :func:`canon_url_py`."""
     c = F.trim(col)
     scheme = F.lower(F.regexp_extract(c, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
     auth = F.lower(F.regexp_extract(c, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1))
@@ -105,7 +111,7 @@ def canon_url(col: Column, percent_decode: bool = True) -> Column:
         .when((scheme == "https") & auth.endswith(":443"), F.substring(auth, F.lit(1), F.length(auth) - 4))
         .otherwise(auth)
     )
-    rest = F.regexp_extract(c, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^#]*)", 1)
+    rest = _pct_norm_col(F.regexp_extract(c, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^#]*)", 1))
     path = F.regexp_extract(rest, r"^([^?]*)", 1)
     query = F.regexp_extract(rest, r"^[^?]*(\?.*)?$", 1)
     path = F.regexp_replace(path, r"/{2,}", "/")
@@ -118,21 +124,8 @@ def canon_url(col: Column, percent_decode: bool = True) -> Column:
 
 
 def with_canon(df, src: str = "url", out: str = "url_canon"):
-    """Attach the canonical URL with the native-first split the module
-    docstring prescribes: URLs with no '%' escape (the overwhelmingly
-    common case) run the all-native Catalyst chain inside codegen; only
-    the %-subset pays the Arrow UDF. The two branches are disjoint
-    filters of the same frame union'd back — on a %-free corpus the
-    Python stage receives zero rows. NULL urls ride the native branch
-    (both paths map NULL → NULL)."""
-    has_pct = F.col(src).contains("%")
-    clean = df.filter(F.coalesce(~has_pct, F.lit(True))).withColumn(
-        out, canon_url(F.col(src), percent_decode=False)
-    )
-    esc = df.filter(F.coalesce(has_pct, F.lit(False))).withColumn(
-        out, _canon_udf()(F.col(src))
-    )
-    return clean.unionByName(esc)
+    """Attach the canonical URL of column ``src`` as ``out`` (NULL -> NULL)."""
+    return df.withColumn(out, canon_url(F.col(src)))
 
 
 def url_host(col: Column) -> Column:
@@ -152,12 +145,27 @@ def host_py(url: str) -> str:
     return m.group("auth").lower().rsplit(":", 1)[0] if ":" in m.group("auth") else m.group("auth").lower()
 
 
+def _pct_norm_sql(rest: str) -> str:
+    """DuckDB twin of :func:`_pct_norm_col` (list lambdas index from 1)."""
+    decode = ", ".join(f"'{h}': '{ch}'" for h, ch in _UNRESERVED_BY_HEX.items())
+    return f"""
+        CASE WHEN contains({rest}, '%') THEN array_to_string(list_transform(
+            string_split({rest}, '%'),
+            (_p, _i) -> CASE
+                WHEN _i = 1 THEN _p
+                WHEN regexp_matches(_p, '^[0-9A-Fa-f]{{2}}')
+                    THEN coalesce(
+                        MAP {{{decode}}}[upper(substr(_p, 1, 2))][1],
+                        '%' || upper(substr(_p, 1, 2))
+                    ) || substr(_p, 3)
+                ELSE '%' || _p END
+        ), '') ELSE {rest} END
+    """
+
+
 def canon_url_sql(expr: str) -> str:
-    """DuckDB twin of the all-native ``canon_url(percent_decode=False)``
-    expression chain, regexp-for-regexp (RE2-safe: no backreferences or
-    lookarounds). The %-escape branch is Python-only on both sides — the
-    oracled query feeds it zero rows; percent-decode equivalence is
-    property-tested against :func:`canon_url_py` in tests/test_urls.py."""
+    """DuckDB twin of :func:`canon_url`, regexp-for-regexp (RE2-safe: no
+    backreferences or lookarounds), percent step included."""
     c = f"trim({expr})"
     scheme = f"lower(regexp_extract({c}, '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1))"
     auth0 = f"lower(regexp_extract({c}, '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1))"
@@ -168,7 +176,7 @@ def canon_url_sql(expr: str) -> str:
                  THEN substr({auth0}, 1, length({auth0}) - 4)
              ELSE {auth0} END
     """
-    rest = f"regexp_extract({c}, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^#]*)', 1)"
+    rest = _pct_norm_sql(f"regexp_extract({c}, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^#]*)', 1)")
     path0 = f"regexp_replace(regexp_extract({rest}, '^([^?]*)', 1), '/{{2,}}', '/', 'g')"
     path = f"""
         CASE WHEN {path0} = '' THEN '/'
