@@ -235,9 +235,6 @@ HEADLINE = [
     "assign_ids",             # two-phase global rank (no single-partition window)
     "stream_slot_window",
     "media_features",
-    "media_audio",            # real stdlib WAV decode (PCM samples → features)
-    "media_video",            # real stdlib Y4M frame sampling (header-stride walk)
-    "media_jpeg",             # real baseline-JPEG decode (entropy + IDCT, numpy)
     "word_segment",           # corpus-trained maximal-matching segmenter (fit+apply)
     "decontaminate",          # benchmark 8-gram overlap (broadcast gram join)
     "pii_scrub",              # counted redaction chains (pure codegen)
@@ -246,8 +243,6 @@ HEADLINE = [
     "bm25_topk",              # BM25 top-10/query, decimal-summed scores
     "bm25_topk_incremental",  # delta-only tokenization vs persisted index
     "robots_parse",           # robots.txt parse + rule application
-    "media_resize",           # real PNG decode -> nearest-neighbor resize
-    "media_frames",           # Y4M header-stride frame sampling
     "ann_ivf_topk",           # persisted IVF index probe (partition-pruned)
     "lda_topics",             # Spark ML EM LDA fit + argmax (grain-k)
     "sessionize_stream",      # applyInPandasWithState sessionization

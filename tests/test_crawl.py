@@ -371,6 +371,94 @@ def test_default_compaction_keeps_seen_read_short(spark):
         pages.unpersist()
 
 
+@pytest.fixture(scope="module")
+def finished_crawl(spark):
+    """A small crawl run to completion without auto-compaction, then
+    resumed once more: that extra round has an empty frontier and seals
+    nothing, so its seen delta touches no bucket. Tests copy the state
+    dir before changing it."""
+    site = SiteConfig(n_categories=3, articles_per_category=6)
+    pages = build_pages_df(spark, site).cache()
+    robots = build_robots_df(spark, site)
+    cfg = CrawlConfig(as_of="2025-12-01T22:30:00", round_seconds=30.0, compact_every=0)
+    sd = tempfile.mkdtemp(prefix="finished_")
+    eng = CrawlEngine(spark, pages, robots, sd, cfg)
+    eng.run(seeds=seed_urls(site))
+    eng.run(resume=True)
+    last = eng.state.last_committed_round()
+    assert eng.state._delta_buckets(last - 1, last) == set()
+    sim = simulate_crawl(site, cfg, seed_urls(site))
+    yield sd, last, sim, (pages, robots, cfg)
+    shutil.rmtree(sd, ignore_errors=True)
+    pages.unpersist()
+
+
+def _copy_state(spark, src):
+    from web_scraper_spark.frontier.state import CrawlState
+
+    dst = tempfile.mkdtemp(prefix="statecopy_")
+    shutil.copytree(src, dst, dirs_exist_ok=True)
+    return CrawlState(spark, dst)
+
+
+def test_compact_seen_rerun_on_committed_round(spark, finished_crawl):
+    """A second compact_seen(k) on a committed k is a no-op (it used to
+    take its own data/ as the base and hard-link onto itself)."""
+    sd, last, sim, _ = finished_crawl
+    st = _copy_state(spark, sd)
+    try:
+        assert st.compact_seen(last) == last
+        assert st.compact_seen(last) == last
+        assert {r["url_canon"] for r in st.read_seen(last).collect()} == sim.seen
+    finally:
+        shutil.rmtree(st.dir, ignore_errors=True)
+
+
+def test_compact_seen_rerun_after_interrupted_link_only_compaction(spark, finished_crawl):
+    """A compaction whose delta tail touched no bucket only hard-links the
+    previous base. Killed after the first bucket, its rerun must start
+    over instead of linking onto the links already there."""
+    import os
+
+    sd, last, sim, _ = finished_crawl
+    st = _copy_state(spark, sd)
+    try:
+        st.compact_seen(last - 1)
+        link = st._link_bucket_dir
+
+        def killed_after_one_bucket(src, dst):
+            link(src, dst)
+            raise RuntimeError("killed mid-compaction")
+
+        st._link_bucket_dir = killed_after_one_bucket
+        with pytest.raises(RuntimeError, match="killed"):
+            st.compact_seen(last)
+        del st._link_bucket_dir
+        assert st.compact_seen(last) == last
+        assert st.seen_paths(last) == [os.path.join(st._compaction_dir(last), "data")]
+        assert {r["url_canon"] for r in st.read_seen(last).collect()} == sim.seen
+    finally:
+        shutil.rmtree(st.dir, ignore_errors=True)
+
+
+def test_resume_with_lost_manifest_raises(spark, finished_crawl):
+    """Resume sums fetch_log lineage from every round's manifest; a lost
+    manifest must fail loudly instead of shifting later fetch_pos."""
+    import os
+
+    sd, _, _, (pages, robots, cfg) = finished_crawl
+    st = _copy_state(spark, sd)
+    try:
+        st.drop_rounds_after(3)
+        os.remove(os.path.join(st._round_dir(1), "manifest.json"))
+        eng = CrawlEngine(spark, pages, robots, st.dir, cfg)
+        with pytest.raises(FileNotFoundError):
+            eng.run(resume=True)
+        assert st.last_committed_round() == 3  # nothing was committed
+    finally:
+        shutil.rmtree(st.dir, ignore_errors=True)
+
+
 def test_politeness_continuity_across_short_rounds(spark):
     """round_seconds shorter than some crawl_delays: the per-host schedule
     phase must carry across round boundaries — consecutive fetch times

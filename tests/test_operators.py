@@ -1,5 +1,5 @@
-"""Unit tests for the operator library (dedup tiers, similarity, text ops,
-multimodal plumbing) with hand-checkable fixtures, plus Spark↔DuckDB↔Python
+"""Unit tests for the operator library (dedup tiers, similarity, text ops)
+with hand-checkable fixtures, plus Spark↔DuckDB↔Python
 hash portability — the property every oracle-checked sketch rests on."""
 
 from __future__ import annotations
@@ -300,53 +300,6 @@ def test_lsh_ann_recalls_close_pair(spark):
     assert (0, 2) not in got  # cosine 0 < tau even if bucketed together
 
 
-def test_media_decode_stub(spark):
-    from web_scraper_spark.operators.multimodal import FEATURE_DIM, decode_media
-
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(b"payload-bytes"))],
-        "media_id bigint, kind string, payload binary",
-    )
-    out = decode_media(media, fake=True).collect()
-    assert len(out) == 1 and len(out[0]["features"]) == FEATURE_DIM
-    with pytest.raises(Exception, match="NotImplementedError|media decode"):
-        decode_media(media, fake=False).collect()
-
-
-def test_media_resize_and_frame_sample_stubs(spark):
-    """resize emits the REAL raster byte shape (w*h*3); frame sampling is
-    the row-expanding mapInPandas shape with deterministic output."""
-    from web_scraper_spark.operators.multimodal import resize_images, sample_frames
-
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(b"img-payload")),
-            (2, "video", bytearray(b"v" * 400)),
-            (3, "video", bytearray(b"w" * 4000)),
-        ],
-        "media_id bigint, kind string, payload binary",
-    )
-    resized = {r["media_id"]: r for r in resize_images(media, 8, 8, fake=True).collect()}
-    assert len(resized) == 3
-    assert all(len(bytes(r["payload"])) == 8 * 8 * 3 for r in resized.values())
-    again = {r["media_id"]: bytes(r["payload"])
-             for r in resize_images(media, 8, 8, fake=True).collect()}
-    assert {k: bytes(v["payload"]) for k, v in resized.items()} == again  # deterministic
-
-    frames = sample_frames(media, fps_divisor=10, max_frames=4, fake=True).collect()
-    by_media: dict[int, list] = {}
-    for r in frames:
-        by_media.setdefault(r["media_id"], []).append(r)
-    assert set(by_media) == {2, 3}  # only video rows expand
-    assert len(by_media[2]) == 2 and len(by_media[3]) == 4  # size-derived counts
-    assert [r["frame_no"] for r in sorted(by_media[3], key=lambda r: r["frame_no"])] == [0, 1, 2, 3]
-    assert all(len(bytes(r["frame"])) == 16 for r in frames)
-    with pytest.raises(Exception, match="NotImplementedError|resize"):
-        resize_images(media, fake=False).collect()
-    with pytest.raises(Exception, match="NotImplementedError|frame"):
-        sample_frames(media, fake=False).collect()
-
-
 def test_lang_id_charset_and_markers(spark):
     from web_scraper_spark.operators.text import cjk_ratio, clean_text, lang_pred, tokens
 
@@ -374,35 +327,6 @@ def test_quality_empty_text_guard(spark):
     for r in rows:
         assert r["n"] == 0
         assert r["q"] is not None and not math.isnan(r["q"])
-
-
-def test_sniff_mime_container_aware(spark):
-    """ADVICE r3: RIFF sniffs by form type (WAVE vs AVI vs WEBP), mp4 by
-    the 'ftyp' brand at offset 5, not one box-size value."""
-    from web_scraper_spark.operators.multimodal import sniff_mime
-
-    rows = [
-        (1, b"RIFF\x24\x00\x00\x00WAVEfmt "),           # real WAV
-        (2, b"RIFF\x24\x00\x00\x00AVI LIST"),            # AVI, not audio
-        (3, b"RIFF\x24\x00\x00\x00WEBPVP8 "),            # WebP, not audio
-        (4, b"RIFF\x24\x00\x00\x00XXXX????"),            # unknown RIFF
-        (5, b"\x00\x00\x00\x18ftypisom\x00\x00"),        # classic mp4
-        (6, b"\x00\x00\x00\x20ftypmp42\x00\x00"),        # other box size: still mp4
-        (7, b"\x89PNG\r\n\x1a\n...."),
-        (8, b"plain text bytes"),
-    ]
-    df = spark.createDataFrame(rows, "media_id bigint, payload binary")
-    got = {r["media_id"]: r["sniffed_mime"] for r in sniff_mime(df).collect()}
-    assert got == {
-        1: "audio/wav",
-        2: "video/x-msvideo",
-        3: "image/webp",
-        4: "application/x-riff",
-        5: "video/mp4",
-        6: "video/mp4",
-        7: "image/png",
-        8: "application/octet-stream",
-    }
 
 
 # ---------------------------------------------------------------------------

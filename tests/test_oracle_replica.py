@@ -109,8 +109,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", BEYOND_WINDOW)
-def test_oracled_beyond_window_matches_duckdb(spark, duck, name):
+def _assert_matches_duckdb(spark, duck, name):
     df = _QS[name](spark, SF_DIR)
     scols = df.columns
     sdata = [tuple(r) for r in df.collect()]
@@ -120,3 +119,18 @@ def test_oracled_beyond_window_matches_duckdb(spark, duck, name):
     assert sorted(scols) == sorted(ocols)
     assert len(sdata) == len(odata)
     assert frame_key(sdata, scols) == frame_key(odata, ocols)
+
+
+@pytest.mark.parametrize("name", BEYOND_WINDOW)
+def test_oracled_beyond_window_matches_duckdb(spark, duck, name):
+    _assert_matches_duckdb(spark, duck, name)
+
+
+@pytest.mark.parametrize("name", ["media_stats", "media_features"])
+def test_media_gate_entries_match_duckdb(spark, duck, name):
+    """The two media entries inside the 50-entry gate window against their
+    DuckDB twins; both are plain Column expressions, so no plan runs Python."""
+    plan = _QS[name](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    for marker in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert marker not in plan, marker
+    _assert_matches_duckdb(spark, duck, name)

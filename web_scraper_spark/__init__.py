@@ -14,7 +14,7 @@ as an idiomatic Spark DataFrame engine:
 - ``dedup``     exact / MinHash-LSH / SimHash / n-gram / embedding dedup
 - ``similarity``ANN over embedding columns
 - ``ml``        topic modeling (CountVectorizer+LDA), NER, relation tiering
-- ``multimodal``binary-column plumbing (decode stubbed; schema/batching real)
+- ``multimodal``binary media column: native size/hash stats and features
 """
 
 __version__ = "0.1.0"

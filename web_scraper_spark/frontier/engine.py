@@ -347,14 +347,17 @@ class CrawlEngine:
         from the manifests' lineage (exact per-file counts recorded at
         commit time) — NOT a scan of the logs themselves: at the 10^10-row
         design point re-counting the full multi-round log on every resume
-        is a full parquet scan for a number the metadata already holds."""
-        total = 0
-        for i in range(upto + 1):
-            try:
-                total += sum(self.state.manifest(i)["lineage"]["fetch_log"])
-            except (FileNotFoundError, KeyError):
-                pass
-        return total
+        is a full parquet scan for a number the metadata already holds.
+
+        The sum starts at the first committed round (a state dir may be
+        started past round 0 by committing a frontier directly). A round
+        without a manifest after that raises: skipping it would shift
+        every later ``fetch_pos``."""
+        first = min(self.state.committed_rounds())
+        return sum(
+            sum(self.state.manifest(i)["lineage"]["fetch_log"])
+            for i in range(first, upto + 1)
+        )
 
     # ------------------------------------------------------------------
 
@@ -495,10 +498,7 @@ class CrawlEngine:
         # derives status counts from the WRITTEN fetch_log (a scan of the
         # small committed file), row counts come free from parquet footers
         # (lineage), and frontier_in comes from the previous manifest.
-        try:
-            n_frontier = sum(self.state.manifest(k - 1)["lineage"]["frontier"])
-        except (FileNotFoundError, KeyError):
-            n_frontier = 0
+        n_frontier = sum(self.state.manifest(k - 1)["lineage"]["frontier"])
         from web_scraper_spark.frontier.politeness import next_host_state
 
         man = self.state.commit_round(

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import time as _time
 
@@ -194,6 +195,8 @@ class CrawlState:
         Readers at or past that round switch to base + tail; older
         compactions and the folded deltas become garbage (kept — cheap,
         and crash-simulating tests drop round dirs independently).
+        Re-running is safe: a committed round returns at once, and an
+        interrupted attempt is cleared and redone.
 
         Incremental (Iceberg ``overwritePartitions`` analogue): when a
         previous compaction exists, only the buckets the delta tail
@@ -205,8 +208,13 @@ class CrawlState:
         table size — at the 10^10-URL design point a round that sealed
         URLs in 3% of the buckets re-writes 3% of the base."""
         upto = self.last_committed_round() if upto_round is None else upto_round
-        base_round, base_path = self._latest_compaction(upto)
         cd = self._compaction_dir(upto)
+        if os.path.exists(os.path.join(cd, "_COMMITTED")):
+            return upto  # already folded; the base must not link onto itself
+        # an interrupted earlier attempt may have left files or hard links
+        # here; nothing reads an uncommitted compaction, so start clean
+        shutil.rmtree(cd, ignore_errors=True)
+        base_round, base_path = self._latest_compaction(upto)
         data = os.path.join(cd, "data")
         if base_path is None:
             # first compaction: full fold
@@ -464,8 +472,6 @@ class CrawlState:
 
     def drop_rounds_after(self, k: int) -> None:
         """Test/ops helper: simulate a crash by removing snapshots > k."""
-        import shutil
-
         for name in list(os.listdir(self.dir)):
             if name.startswith("round=") and int(name.split("=")[1]) > k:
                 shutil.rmtree(os.path.join(self.dir, name))
@@ -543,8 +549,6 @@ class CrawlState:
         ``fetch_log/`` partition (append-only current-table data).
 
         Returns {"expired_rounds", "files_freed", "bytes_freed"}."""
-        import shutil
-
         rounds = self.committed_rounds()
         if not rounds or keep_last < 1:
             return {"expired_rounds": [], "files_freed": 0, "bytes_freed": 0}

@@ -8,5 +8,5 @@ Modules:
 - similarity: brute-force cosine top-k + LSH-bucketed ANN.
 - analytics: SURVEY §2 relational operators mapped onto the testdata tables.
 - topics: CountVectorizer + LDA (Spark ML) — the reference's topic stage.
-- multimodal: binary-column plumbing for image/audio payloads (decode stubbed).
+- multimodal: binary media column, native size/hash stats and features.
 """

@@ -335,8 +335,7 @@ def stratified_sample(
     aggregate over ≤|langs| keys; the scalar N and the quota table are
     broadcast back (broadcast-scalar crossJoin — the repo-sanctioned
     pattern); ranking is a window partitioned by lang (never
-    single-partition; stratum skew is bounded by the stratum count, and a
-    hotter stratum would salt through operators/skew.py). Only
+    single-partition; stratum skew is bounded by the stratum count). Only
     (doc_id, lang, source, hash) ever shuffles — no text movement.
     """
     w = weights or MIX_WEIGHTS

@@ -1,63 +1,20 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary + metadata.
+"""Media payloads as a binary column: the two registry media queries.
 
 The target input table carries ``html:binary``; a training-data pipeline
-extends the same pattern to media payloads. Design (all real and tested):
+extends the same pattern to media payloads. ``synth_media`` derives a
+deterministic media table (media_id, kind, payload binary, meta struct)
+from the documents, and both queries over it are plain Column
+expressions — size, md5 content hash and md5-derived features are
+computed in the scan's codegen stage and never leave the JVM. Each has a
+DuckDB twin (``media_stats_sql``, ``queries.MEDIA_FEATURES_SQL``).
 
-- media table schema: (media_id bigint, kind string, payload binary,
-  meta struct<mime:string, n_bytes:bigint, width:int, height:int>);
-- cheap metadata ops (size, magic-byte sniff, content hash) are native
-  Column expressions — they run in the scan stage and never leave the JVM;
-- decode / resize / frame-sample run as ``mapInPandas`` over Arrow record
-  batches — the batch boundary is the unit of memory control
-  (``spark.sql.execution.arrow.maxRecordsPerBatch`` caps peak bytes per
-  task at scale, the same lever the crawl parse stage uses).
-
-ALL THREE media kinds now decode for REAL under ``fake=False``:
-PNG pixels (operators/pngcodec.py — stdlib zlib + filter
-reconstruction), baseline JPEG pixels (operators/jpegcodec.py — full
-entropy decode + IDCT, conformance-tested against an independent raw
-ground truth), GIF pixels (operators/gifcodec.py — LZW + palette,
-pixel-tight conformance on the same ground truth), BMP pixels
-(operators/bmpcodec.py — bit-for-bit EXACT vs the ground truth;
-24/32 bpp + bitfields + palette), WAV samples
-(operators/wavcodec.py — stdlib RIFF/PCM parse), and Y4M video frames
-(operators/y4mcodec.py — YUV4MPEG2 header walk + planar 4:2:0 frame
-strides). ``decode_media`` derives features from actual pixels/samples/
-planes, ``resize_images`` resizes real rasters (PNG/JPEG/GIF), and
-``sample_frames`` finds REAL frame boundaries from the decoded stream
-header. JPEG covers baseline SOF0 AND progressive SOF2 (jpegcodec's
-multi-scan path). mp3/mp4 SAMPLE decode stays STUBBED (genuinely needs
-ffmpeg-class codecs): on those payloads fake=False raises
-NotImplementedError and fake=True emits a deterministic md5-derived
-stand-in with the exact schema/batch shape the real decoder would
-produce — but their CONTAINER metadata (duration/codec/dimensions/
-bitrate) parses for real via operators/mediameta.py
-(`media_container_meta`).
+No payload is decoded: the reference scraper handles text only.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id bigint, kind string, payload binary, "
-    "meta struct<mime:string, n_bytes:bigint, width:int, height:int>"
-)
-
-# magic-byte → mime sniff table (native CASE over the first payload bytes).
-# Container formats that need more than a prefix (RIFF form type, mp4
-# 'ftyp' brand) get dedicated rules in sniff_mime (ADVICE r3).
-_MAGIC = [
-    ("89504e47", "image/png"),
-    ("ffd8ff", "image/jpeg"),
-    ("47494638", "image/gif"),
-    ("59555634", "video/x-yuv4mpeg"),
-    ("49443303", "audio/mpeg"),
-]
 
 FEATURE_DIM = 8
 
@@ -82,219 +39,6 @@ def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("int").alias("width"),
             F.lit(None).cast("int").alias("height"),
         ).alias("meta"),
-    )
-
-
-def synth_png_media(
-    spark: SparkSession, sf_dir: str, max_side: int = 24
-) -> DataFrame:
-    """Media table whose payloads are REAL PNGs: deterministic per-doc
-    gradient rasters (seeded by doc_id, sized by doc_id so decode sees
-    varied dimensions), encoded by pngcodec. This is the input for the
-    fake=False decode/resize path — the pixels that come back out are
-    checkable against the generator's arithmetic."""
-    import pandas as pd
-
-    from web_scraper_spark.operators.pngcodec import png_encode
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-    def gen(it):
-        import numpy as np
-
-        for pdf in it:
-            ids, payloads, widths, heights = [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = 4 + (d * 7) % (max_side - 3)
-                h = 4 + (d * 11) % (max_side - 3)
-                arr = synth_raster(d, w, h)
-                ids.append(d)
-                payloads.append(png_encode(arr))
-                widths.append(w)
-                heights.append(h)
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "width": widths, "height": heights}
-            )
-
-    out_schema = "media_id bigint, payload binary, width int, height int"
-    return docs.mapInPandas(gen, schema=out_schema).select(
-        "media_id",
-        F.lit("image").alias("kind"),
-        "payload",
-        F.struct(
-            F.lit("image/png").alias("mime"),
-            F.length("payload").cast("bigint").alias("n_bytes"),
-            F.col("width"),
-            F.col("height"),
-        ).alias("meta"),
-    )
-
-
-def synth_wav_media(
-    spark: SparkSession, sf_dir: str, max_samples: int = 4096
-) -> DataFrame:
-    """Media table whose payloads are REAL PCM WAVs: deterministic per-doc
-    waveforms (seeded by doc_id; length, rate and channel count vary by
-    doc_id so decode sees heterogeneous audio). Input for the fake=False
-    audio decode path — the samples that come back out are checkable
-    against the generator's arithmetic."""
-    import pandas as pd
-
-    from web_scraper_spark.operators.wavcodec import wav_encode
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-    def gen(it):
-        for pdf in it:
-            ids, payloads, rates, chans = [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = (8000, 16000, 44100)[d % 3]
-                ch = 1 + d % 2
-                n = 256 + (d * 37) % (max_samples - 255)
-                ids.append(d)
-                payloads.append(wav_encode(synth_waveform(d, n, ch), rate))
-                rates.append(rate)
-                chans.append(ch)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": payloads,
-                    "sample_rate": rates,
-                    "channels": chans,
-                }
-            )
-
-    out_schema = "media_id bigint, payload binary, sample_rate int, channels int"
-    return docs.mapInPandas(gen, schema=out_schema).select(
-        "media_id",
-        F.lit("audio").alias("kind"),
-        "payload",
-        F.struct(
-            F.lit("audio/wav").alias("mime"),
-            F.length("payload").cast("bigint").alias("n_bytes"),
-            F.col("sample_rate").alias("width"),
-            F.col("channels").alias("height"),
-        ).alias("meta"),
-    )
-
-
-def synth_y4m_media(
-    spark: SparkSession, sf_dir: str, max_side: int = 32
-) -> DataFrame:
-    """Media table whose payloads are REAL YUV4MPEG2 streams: deterministic
-    per-doc planar 4:2:0 frames (geometry, frame count and fps vary by
-    doc_id so the sampler sees heterogeneous strides). Input for the
-    fake=False video path — frames that come back out are checkable
-    against the generator's arithmetic."""
-    import pandas as pd
-
-    from web_scraper_spark.operators.y4mcodec import y4m_encode
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-    def gen(it):
-        for pdf in it:
-            ids, payloads, widths, heights = [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = 8 + 2 * ((d * 7) % ((max_side - 8) // 2))
-                h = 8 + 2 * ((d * 11) % ((max_side - 8) // 2))
-                n_frames = 2 + d % 9
-                fps = ((24, 1), (25, 1), (30, 1))[d % 3]
-                frames = [synth_yuv_planes(d, t, w, h) for t in range(n_frames)]
-                ids.append(d)
-                payloads.append(y4m_encode(frames, fps))
-                widths.append(w)
-                heights.append(h)
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "width": widths, "height": heights}
-            )
-
-    out_schema = "media_id bigint, payload binary, width int, height int"
-    return docs.mapInPandas(gen, schema=out_schema).select(
-        "media_id",
-        F.lit("video").alias("kind"),
-        "payload",
-        F.struct(
-            F.lit("video/x-yuv4mpeg").alias("mime"),
-            F.length("payload").cast("bigint").alias("n_bytes"),
-            F.col("width"),
-            F.col("height"),
-        ).alias("meta"),
-    )
-
-
-def synth_yuv_planes(doc_id: int, t: int, w: int, h: int):
-    """The deterministic (y, u, v) uint8 planes tests recompute — exact
-    integer gradients seeded by (doc_id, frame index)."""
-    import numpy as np
-
-    ys = np.arange(h, dtype=np.int64)[:, None]
-    xs = np.arange(w, dtype=np.int64)[None, :]
-    y = ((ys * 13 + xs * 7 + doc_id * 3 + t * 11) & 0xFF).astype("uint8")
-    ys2 = np.arange(h // 2, dtype=np.int64)[:, None]
-    xs2 = np.arange(w // 2, dtype=np.int64)[None, :]
-    u = ((ys2 * 5 + xs2 * 3 + doc_id + t * 17) & 0xFF).astype("uint8")
-    v = ((ys2 * 9 + xs2 + doc_id * 5 + t * 7) & 0xFF).astype("uint8")
-    return y, u, v
-
-
-def synth_waveform(doc_id: int, n: int, channels: int):
-    """The deterministic (n, channels) int16 waveform tests recompute:
-    a doc-seeded integer sine table plus an LCG dither, exact arithmetic
-    (no float rounding ambiguity between generator and test)."""
-    import numpy as np
-
-    t = np.arange(n, dtype=np.int64)
-    out = np.empty((n, channels), dtype=np.int16)
-    for c in range(channels):
-        period = 20 + (doc_id * 13 + c * 7) % 80
-        # triangle wave in exact integers: ramp 0..period-1 folded to ±
-        phase = (t + doc_id) % period
-        tri = np.abs(phase * 2 - (period - 1)) * (20000 // period) - 10000
-        lcg = (t * 1103515245 + doc_id * 12345 + c) % 2048 - 1024
-        out[:, c] = (tri + lcg).astype(np.int16)
-    return out
-
-
-def synth_raster(doc_id: int, w: int, h: int):
-    """The deterministic (h, w, 3) uint8 gradient tests recompute."""
-    import numpy as np
-
-    ys = np.arange(h, dtype=np.int64)[:, None]
-    xs = np.arange(w, dtype=np.int64)[None, :]
-    r = (ys * 31 + doc_id) & 0xFF
-    g = (xs * 17 + doc_id * 3) & 0xFF
-    b = (ys * xs + doc_id * 7) & 0xFF
-    return np.stack(
-        [np.broadcast_to(r, (h, w)), np.broadcast_to(g, (h, w)), b], axis=2
-    ).astype("uint8")
-
-
-def sniff_mime(media: DataFrame) -> DataFrame:
-    """Native magic-byte sniff — runs inside the scan's codegen stage.
-
-    Container-aware (ADVICE r3): RIFF is only audio/wav when the form
-    type at bytes 9-12 is 'WAVE' (AVI 'AVI ' and WebP 'WEBP' share the
-    RIFF magic and sniff to their own mimes); mp4 matches the 'ftyp'
-    brand at byte offset 5 rather than one specific box length."""
-    head = F.lower(F.hex(F.substring(F.col("payload"), 1, 4)))
-    form = F.lower(F.hex(F.substring(F.col("payload"), 9, 4)))  # RIFF form type
-    brand = F.lower(F.hex(F.substring(F.col("payload"), 5, 4)))  # mp4 box type
-    mime = F.lit("application/octet-stream")
-    for magic, m in reversed(_MAGIC):
-        mime = F.when(head.startswith(magic), F.lit(m)).otherwise(mime)
-    is_riff = head == "52494646"
-    return media.withColumn(
-        "sniffed_mime",
-        F.when(is_riff & (form == "57415645"), F.lit("audio/wav"))  # WAVE
-        .when(is_riff & (form == "41564920"), F.lit("video/x-msvideo"))  # 'AVI '
-        .when(is_riff & (form == "57454250"), F.lit("image/webp"))  # WEBP
-        .when(is_riff, F.lit("application/x-riff"))
-        .when(brand == "66747970", F.lit("video/mp4"))  # 'ftyp' at offset 5
-        .otherwise(mime),
     )
 
 
@@ -339,209 +83,17 @@ def media_stats_sql() -> str:
     """
 
 
-def decode_media(media: DataFrame, fake: bool = False) -> DataFrame:
-    """Decode/feature-extract stage: mapInPandas over Arrow batches.
-
-    With fake=False, PNG payloads are REALLY decoded (pngcodec: 8-dim
-    vector of per-channel mean/255, std/255, width/4096, height/4096
-    from actual pixels) and WAV payloads are REALLY decoded (wavcodec:
-    duration/rate/channels/rms/peak/zero-cross/dc/energy-split from
-    actual PCM samples). Other formats raise NotImplementedError (no
-    PIL/ffmpeg/librosa in this container). With fake=True every payload
-    gets a deterministic md5-derived vector — identical schema,
-    partitioning and batch shape.
-    """
-    out_schema = (
-        "media_id bigint, kind string, n_bytes bigint, "
-        f"features array<double>"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        from web_scraper_spark.operators.bmpcodec import bmp_decode
-        from web_scraper_spark.operators.gifcodec import gif_decode
-        from web_scraper_spark.operators.jpegcodec import jpeg_decode
-        from web_scraper_spark.operators.pngcodec import png_decode
-        from web_scraper_spark.operators.wavcodec import audio_features, wav_decode
-        from web_scraper_spark.operators.y4mcodec import video_features
-
-        for pdf in it:
-            feats, ids, kinds, sizes = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload)
-                if fake:
-                    digest = hashlib.md5(payload).digest()
-                    fv = [round(digest[i] / 255.0, 6) for i in range(FEATURE_DIM)]
-                elif (
-                    payload.startswith(b"\x89PNG")
-                    or payload.startswith(b"\xff\xd8")
-                    or payload.startswith(b"GIF8")
-                    or payload.startswith(b"BM")
-                ):
-                    if payload.startswith(b"\x89PNG"):
-                        rgb = png_decode(payload)
-                    elif payload.startswith(b"\xff\xd8"):
-                        rgb = jpeg_decode(payload)
-                    elif payload.startswith(b"GIF8"):
-                        rgb = gif_decode(payload)
-                    else:
-                        rgb = bmp_decode(payload)
-                    arr = rgb.astype("float64")
-                    h, w = arr.shape[:2]
-                    fv = [
-                        *(round(float(arr[:, :, c].mean()) / 255.0, 6) for c in range(3)),
-                        *(round(float(arr[:, :, c].std()) / 255.0, 6) for c in range(3)),
-                        round(w / 4096.0, 6),
-                        round(h / 4096.0, 6),
-                    ]
-                elif payload.startswith(b"RIFF"):
-                    samples, rate = wav_decode(payload)
-                    fv = audio_features(samples, rate, dim=FEATURE_DIM)
-                elif payload.startswith(b"YUV4MPEG2"):
-                    fv = video_features(payload, dim=FEATURE_DIM)
-                else:
-                    raise NotImplementedError(
-                        "only PNG, baseline JPEG, GIF, WAV and Y4M decode "
-                        "are real in this container (stdlib pngcodec/"
-                        "jpegcodec/gifcodec/wavcodec/y4mcodec); other "
-                        "compressed formats need PIL/ffmpeg/librosa — pass "
-                        "fake=True for the deterministic stub"
-                    )
-                feats.append(fv)
-                ids.append(row.media_id)
-                kinds.append(row.kind)
-                sizes.append(len(payload))
-            yield pd.DataFrame(
-                {"media_id": ids, "kind": kinds, "n_bytes": sizes, "features": feats}
-            )
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        batches, schema=out_schema
-    )
-
-
-def resize_images(
-    media: DataFrame, width: int = 32, height: int = 32, fake: bool = False
-) -> DataFrame:
-    """Image resize stage: (media_id, payload) → (media_id, width, height,
-    payload) with the resized raster (width*height*3 raw RGB bytes) as the
-    new payload. With fake=False, PNG payloads are REALLY decoded
-    (pngcodec) and nearest-neighbor resized — actual pixels out; non-PNG
-    raises NotImplementedError (no PIL in this container). fake=True emits
-    a deterministic md5-derived raster of the same exact byte shape."""
-    out_schema = "media_id bigint, width int, height int, payload binary"
-    n_out = width * height * 3
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        from web_scraper_spark.operators.gifcodec import gif_decode
-        from web_scraper_spark.operators.jpegcodec import jpeg_decode
-        from web_scraper_spark.operators.pngcodec import png_decode, resize_nearest
-
-        for pdf in it:
-            ids, payloads = [], []
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload)
-                if fake:
-                    digest = hashlib.md5(payload).digest()
-                    raster = (digest * (n_out // len(digest) + 1))[:n_out]
-                elif payload.startswith(b"\x89PNG"):
-                    raster = resize_nearest(png_decode(payload), width, height).tobytes()
-                elif payload.startswith(b"\xff\xd8"):
-                    raster = resize_nearest(jpeg_decode(payload), width, height).tobytes()
-                elif payload.startswith(b"GIF8"):
-                    raster = resize_nearest(gif_decode(payload), width, height).tobytes()
-                else:
-                    raise NotImplementedError(
-                        "only PNG, baseline JPEG and GIF resize are real in "
-                        "this container (stdlib pngcodec/jpegcodec/gifcodec); "
-                        "other formats need PIL — pass fake=True for the "
-                        "deterministic stub"
-                    )
-                ids.append(row.media_id)
-                payloads.append(raster)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "width": [width] * len(ids),
-                    "height": [height] * len(ids),
-                    "payload": payloads,
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(batches, schema=out_schema)
-
-
-def sample_frames(
-    media: DataFrame, fps_divisor: int = 10, max_frames: int = 4, fake: bool = False
-) -> DataFrame:
-    """Video frame sampling: one input row → N frame rows (media_id,
-    frame_no, ts_s, frame) — the row-expanding mapInPandas shape (a frame
-    extractor cannot be an explode of a native expression because the
-    payload must be decoded to find frame boundaries).
-
-    With fake=False, YUV4MPEG2 payloads are REALLY walked (y4mcodec):
-    frame boundaries come from the decoded header's 4:2:0 stride, every
-    ``fps_divisor``-th frame is sampled up to ``max_frames``, ``ts_s`` is
-    the true frame timestamp from the stream's fps, and ``frame`` is the
-    raw luma plane. Compressed containers (mp4) raise NotImplementedError
-    (ffmpeg not in this container). fake=True derives a deterministic
-    frame count from the payload size and md5-derived frame bytes."""
-    out_schema = "media_id bigint, frame_no int, ts_s double, frame binary"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        from web_scraper_spark.operators.y4mcodec import y4m_decode_frame, y4m_probe
-
-        for pdf in it:
-            ids, nos, tss, frames = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload)
-                if fake:
-                    n = min(max_frames, max(1, len(payload) // (fps_divisor * 16)))
-                    for i in range(n):
-                        ids.append(row.media_id)
-                        nos.append(i)
-                        tss.append(round(i * float(fps_divisor), 3))
-                        frames.append(hashlib.md5(payload + bytes([i])).digest())
-                elif payload.startswith(b"YUV4MPEG2"):
-                    _w, _h, (num, den), n_total = y4m_probe(payload)
-                    picked = list(range(0, n_total, fps_divisor))[:max_frames]
-                    for out_no, idx in enumerate(picked):
-                        y, _u, _v = y4m_decode_frame(payload, idx)
-                        ids.append(row.media_id)
-                        nos.append(out_no)
-                        tss.append(round(idx * den / num, 3))
-                        frames.append(y.tobytes())
-                else:
-                    raise NotImplementedError(
-                        "only YUV4MPEG2 frame sampling is real in this "
-                        "container (stdlib y4mcodec); compressed containers "
-                        "need ffmpeg — pass fake=True for the deterministic "
-                        "stub"
-                    )
-            if ids:
-                yield pd.DataFrame(
-                    {"media_id": ids, "frame_no": nos, "ts_s": tss, "frame": frames}
-                )
-
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", "payload")
-        .mapInPandas(batches, schema=out_schema)
-    )
-
-
 def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """queries() entry: the fake-decode path — per-kind mean feature vector
-    (what an embedding-quality monitor would compute post-decode)."""
-    media = synth_media(spark, sf_dir)
-    feats = decode_media(media, fake=True)
-    dims = [
-        F.round(F.avg(F.element_at("features", i + 1)), 6).alias(f"f{i}_mean")
+    """queries() entry: per-kind mean of an md5-derived feature vector
+    (what an embedding-quality monitor would compute post-decode).
+    Feature i is byte i of md5(payload) / 255, rounded to 6 places — the
+    same expression as the DuckDB twin, so no Python runs per row."""
+    digest = synth_media(spark, sf_dir).select("kind", F.md5("payload").alias("md5"))
+    feats = [
+        F.round(F.conv(F.substring("md5", 2 * i + 1, 2), 16, 10).cast("int") / 255.0, 6)
         for i in range(FEATURE_DIM)
     ]
-    return feats.groupBy("kind").agg(F.count("*").alias("n_items"), *dims)
+    return digest.groupBy("kind").agg(
+        F.count("*").alias("n_items"),
+        *(F.round(F.avg(f), 6).alias(f"f{i}_mean") for i, f in enumerate(feats)),
+    )

@@ -2171,141 +2171,6 @@ def q_lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lda_doc_topics(spark, sf_dir)
 
 
-def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-resize stage with REAL pixel decode: deterministic synthetic
-    PNGs → stdlib PNG decode (operators/pngcodec) → nearest-neighbor
-    resize → raw RGB raster. Rows-only: binary payloads; pixel-exactness
-    against the generator's arithmetic asserted in tests."""
-    from web_scraper_spark.operators.multimodal import resize_images, synth_png_media
-
-    out = resize_images(synth_png_media(spark, sf_dir), width=16, height=16, fake=False)
-    return out.select("media_id", "width", "height", F.length("payload").alias("n_bytes"))
-
-
-def q_media_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio feature stage with REAL PCM decode: deterministic synthetic
-    WAVs → stdlib RIFF/PCM decode (operators/wavcodec) → 8-dim sample
-    features. Rows-only: binary payloads + float features; sample-exact
-    decode and closed-form feature recompute asserted in tests."""
-    from web_scraper_spark.operators.multimodal import decode_media, synth_wav_media
-
-    out = decode_media(synth_wav_media(spark, sf_dir), fake=False)
-    return out.select(
-        "media_id",
-        "n_bytes",
-        F.round(F.element_at("features", 4), 6).alias("rms"),
-        F.round(F.element_at("features", 6), 6).alias("zcr"),
-    )
-
-
-def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling stage (row-expanding mapInPandas; ffmpeg
-    stubbed). Rows-only; per-frame counts/shapes asserted in tests."""
-    from web_scraper_spark.operators.multimodal import sample_frames, synth_media
-
-    out = sample_frames(synth_media(spark, sf_dir), fake=True)
-    return out.select("media_id", "frame_no", "ts_s", F.length("frame").alias("n_bytes"))
-
-
-# tests/data/python.jpg — the CPython test-suite imghdrdata fixture (PSF
-# license): a real baseline 4:2:0 JPEG, embedded so the registered query
-# needs no filesystem fixture path. Conformance vs the raw-pixel twin
-# (python.ppm) is asserted in tests/test_jpeg.py.
-_JPEG_FIXTURE_B64 = (
-    "/9j/4AAQSkZJRgABAQEAAQABAAD/2wBDAAMCAgICAgMCAgIDAwMDBAYEBAQEBAgGBgUGCQgK"
-    "CgkICQkKDA8MCgsOCwkJDRENDg8QEBEQCgwSExIQEw8QEBD/2wBDAQMDAwQDBAgEBAgQCwkL"
-    "EBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBD/wAAR"
-    "CAAQABADASIAAhEBAxEB/8QAFgABAQEAAAAAAAAAAAAAAAAABwQF/8QAJBAAAQQBBAICAwAA"
-    "AAAAAAAAAQIDBAYFBwgSExEiABQJMTL/xAAVAQEBAAAAAAAAAAAAAAAAAAAABv/EACMRAAEC"
-    "BQMFAAAAAAAAAAAAAAECEQMEBQYhABIxFRZhgeH/2gAMAwEAAhEDEQA/ABSm0mobc8HmExLU"
-    "lRzzEWPkJWW+ulrsaUVAseUgslSlH9LKuPryIKuWPZdskzXmm3fX5m2nF4GlVxx/HOpx4ks5"
-    "1+MiU/Iaad7UcUo4tILoS4kqcWkezS0hO/HvuRp0rO6hWnWO1UisZVuFi4GFeyEpmGepa5S5"
-    "SWVPuciFKRFLgSrwetnyPIB+Vb4N9mKhQMzo5po9XLdDs9d6ZVix2VEhiL9kuNPxw2gEKcDQ"
-    "/rs8AuA8VAe0vdl7VOYn+27flGAUgmITjbhSmCg3BYlyeWDkMolvw4KOp1KM6iCNvngZHwet"
-    "f//Z"
-)
-
-# The SAME image as a progressive (SOF2) stream: a deterministic
-# coefficient-level transcode of _JPEG_FIXTURE_B64 produced by
-# tests/jpeg_progressive.encode_progressive under the full
-# successive-approximation scan script (DC first Al=1 + refine, per-band
-# AC first + refine) — decodes pixel-identical to the baseline bytes
-# (asserted in tests/test_jpeg_progressive.py).
-_JPEG_PROGRESSIVE_FIXTURE_B64 = (
-    "/9j/2wBDAAMCAgICAgMCAgIDAwMDBAYEBAQEBAgGBgUGCQgKCgkICQkKDA8MCgsOCwkJDRENDg8Q"
-    "EBEQCgwSExIQEw8QEBD/2wBDAQMDAwQDBAgEBAgQCwkLEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQ"
-    "EBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBD/wgARCAAQABADASIAAhEBAxEB/8QAGAAAAAUAAAAA"
-    "AAAAAAAAAAAAAAMEBQb/2gAMAwEAAgADAAAAAYSjk5rWP//EABkQAAAGAAAAAAAAAAAAAAAAAAME"
-    "BQYHCP/aAAgBAQABBQFGREiOSKlGQz8Rq9yQjinpwnYqCB//xAAkEAAAAAARAAAAAAAAAAAAAAAA"
-    "AQIDBAUGERITFCEiMUFCUf/aAAgBAQAGPwEmBDRahBq8QNDZIHSWlhCUQkM9gswPDDhPOWPbPLs3"
-    "4gtlKQClK4ULI4oIjpggnCxsIdFjgkSKRBHBBHCQkRwoI8UGE2JDCAaEtDYlqUhWEoSMkUYIQskD"
-    "ogZYhhjoY6EIDFij1wwhpEcG9EAJhjjNCyuLcZLMrkA6WJHJSYIGkxEJFjaEJsUhdRPmg3f/xAAd"
-    "EAAAAAoAAAAAAAAAAAAAAAAAAQMEBRUiMUFh/9oACAECAAE/AUsmzkoXVqPJRE1J43h//8QAGxAA"
-    "AAAIAAAAAAAAAAAAAAAAAAECBAUUIVH/2gAIAQMAAT8BMkeSQJZOS2uD/9oADAMBAAIAAwAAABDz"
-    "/8QAFBABAAAAAAAAAAAAAAAAAAAAIP/aAAgBAQABBRAE00//xAAaEAAABwAAAAAAAAAAAAAAAAAA"
-    "AREhMUFR/9oACAEBAAY/EDIdAUQ1kMxiD2BGA5I3JvXyymCJmNuoD9CEZEQNwlIjCdIaqTEmRBcC"
-    "MhoEH//EABcQAAAEAAAAAAAAAAAAAAAAAAERITH/2gAIAQIAAT8QQpABREKMIABMJCJiLkBiBf/E"
-    "ABoQAAAHAAAAAAAAAAAAAAAAAAABITFxgeH/2gAIAQMAAT8QWMMRlJiUsKh//9k="
-)
-
-
-def q_media_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real compressed-image decode (rows-only): 8 rows — 4 carrying the
-    baseline (SOF0) JPEG payload, 4 the progressive (SOF2) transcode of
-    the same image — decoded by operators/jpegcodec.jpeg_decode (full
-    entropy decode incl. multi-scan spectral-selection/successive-
-    approximation accumulation + IDCT, pure numpy) inside one mapInPandas
-    pass; per-image stats come from ACTUAL pixels, so baseline and
-    progressive rows must agree exactly. Rows-only: no SQL engine decodes
-    JPEG; spec conformance is pinned against independent raw ground truth
-    in tests/test_jpeg.py and tests/test_jpeg_progressive.py."""
-    import base64
-
-    baseline = base64.b64decode(_JPEG_FIXTURE_B64)
-    progressive = base64.b64decode(_JPEG_PROGRESSIVE_FIXTURE_B64)
-    media = spark.createDataFrame(
-        [
-            (i, "baseline" if i < 4 else "progressive",
-             bytearray(baseline if i < 4 else progressive))
-            for i in range(8)
-        ],
-        "media_id bigint, sof string, payload binary",
-    )
-
-    def run(it):
-        import pandas as pd
-
-        from web_scraper_spark.operators.jpegcodec import jpeg_decode
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = jpeg_decode(bytes(r.payload)).astype("float64")
-                luma = 0.299 * arr[..., 0] + 0.587 * arr[..., 1] + 0.114 * arr[..., 2]
-                rows.append(
-                    (
-                        r.media_id, r.sof, arr.shape[1], arr.shape[0],
-                        round(float(luma.mean()), 4),
-                        round(float(arr[..., 0].mean()), 4),
-                        round(float(arr[..., 1].mean()), 4),
-                        round(float(arr[..., 2].mean()), 4),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sof", "width", "height", "mean_luma",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return media.mapInPandas(
-        run,
-        "media_id bigint, sof string, width int, height int, mean_luma double, "
-        "mean_r double, mean_g double, mean_b double",
-    )
-
-
 def q_word_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-trained word segmentation (the ViTokenizer-tier model,
     reference ConnectAndSave.py:81): fit mines adjacent 2-/3-gram
@@ -2382,20 +2247,6 @@ def q_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("host", "disallow_prefix")
     )
-
-
-def q_media_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling with REAL stream decode: deterministic
-    synthetic YUV4MPEG2 payloads → stdlib header/stride walk
-    (operators/y4mcodec) → true frame boundaries, timestamps from the
-    stream fps, raw luma planes out. Rows-only: binary frames; plane-exact
-    decode and timestamp arithmetic asserted in tests."""
-    from web_scraper_spark.operators.multimodal import sample_frames, synth_y4m_media
-
-    out = sample_frames(
-        synth_y4m_media(spark, sf_dir), fps_divisor=3, max_frames=3, fake=False
-    )
-    return out.select("media_id", "frame_no", "ts_s", F.length("frame").alias("n_bytes"))
 
 
 # ---------------------------------------------------------------------------
@@ -2611,92 +2462,6 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phrase_search(_docs(spark, sf_dir))
 
 
-def q_media_container_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Container-metadata triage for the two formats whose SAMPLE decode
-    genuinely needs ffmpeg-class codecs (operators/mediameta.py — ISO
-    BMFF box walk, MPEG audio frame walk): duration / codec / dimensions /
-    bitrate extracted WITHOUT decoding samples, the 100 TB media-curation
-    pre-filter. Payloads are deterministic in-query constructions (the
-    INDEPENDENT spec-derived builders live in tests/test_mediameta.py);
-    rows-only: no SQL engine parses mp4/mp3."""
-    import struct as _s
-
-    def _box(btype, payload):
-        return _s.pack(">I", 8 + len(payload)) + btype + payload
-
-    def _full(btype, payload):
-        return _box(btype, b"\x00\x00\x00\x00" + payload)
-
-    def _mp4(dur_ms, w, h):
-        ftyp = _box(b"ftyp", b"isom" + _s.pack(">I", 512) + b"iso2")
-        mvhd = _full(b"mvhd", b"\x00" * 8 + _s.pack(">II", 1000, dur_ms) + b"\x00" * 80)
-        tkhd = _full(b"tkhd", b"\x00" * 76 + _s.pack(">II", w << 16, h << 16))
-        mdhd = _full(b"mdhd", b"\x00" * 8 + _s.pack(">II", 90000, dur_ms * 90) + b"\x00" * 4)
-        hdlr = _full(b"hdlr", b"\x00" * 4 + b"vide" + b"\x00" * 12)
-        stsd = _full(b"stsd", _s.pack(">I", 1) + _s.pack(">I", 16) + b"avc1" + b"\x00" * 8)
-        mdia = _box(b"mdia", mdhd + hdlr + _box(b"minf", _box(b"stbl", stsd)))
-        moov = _box(b"moov", mvhd + _box(b"trak", tkhd + mdia))
-        return ftyp + moov + _box(b"mdat", b"\x00" * 16)
-
-    def _mp3(n_frames, br_idx, bitrate):
-        frames = []
-        for i in range(n_frames):
-            pad = i % 2
-            ln = 144 * bitrate * 1000 // 44100 + pad
-            frames.append(
-                bytes([0xFF, 0xFB, (br_idx << 4) | (pad << 1), 0]) + b"\x00" * (ln - 4)
-            )
-        return b"".join(frames)
-
-    br_grid = [(9, 128), (11, 192), (14, 320)]
-    rows = []
-    for i in range(6):
-        rows.append((i, "mp4", bytearray(_mp4(1500 + 500 * i, 320 + 64 * i, 180 + 36 * i))))
-    for i in range(6):
-        idx, br = br_grid[i % 3]
-        rows.append((6 + i, "mp3", bytearray(_mp3(10 + 4 * i, idx, br))))
-    media = spark.createDataFrame(rows, "media_id bigint, fmt string, payload binary")
-
-    def run(it):
-        import pandas as pd
-
-        from web_scraper_spark.operators.mediameta import mp3_meta, mp4_meta
-
-        for pdf in it:
-            out = []
-            for r in pdf.itertuples(index=False):
-                payload = bytes(r.payload)
-                if r.fmt == "mp4":
-                    m = mp4_meta(payload)
-                    vid = next((t for t in m["tracks"] if t["kind"] == "video"), {})
-                    out.append((
-                        r.media_id, "mp4", m["duration_s"], m["n_tracks"],
-                        "+".join(t["codec"] or "?" for t in m["tracks"]),
-                        None, None, None, vid.get("width"), vid.get("height"),
-                    ))
-                else:
-                    m = mp3_meta(payload)
-                    out.append((
-                        r.media_id, "mp3", m["duration_s"], 1, "mp3",
-                        m["sample_rate"], m["bitrate_kbps"], m["mode"],
-                        None, None,
-                    ))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "fmt", "duration_s", "n_streams", "codecs",
-                    "sample_rate", "bitrate_kbps", "mode", "width", "height",
-                ],
-            )
-
-    return media.mapInPandas(
-        run,
-        "media_id bigint, fmt string, duration_s double, n_streams int, "
-        "codecs string, sample_rate int, bitrate_kbps int, mode string, "
-        "width double, height double",
-    )
-
-
 def queries() -> dict[str, QueryFn]:
     return {
         # relational core (SURVEY §2.2/2.5/2.6/2.7)
@@ -2844,16 +2609,10 @@ def queries() -> dict[str, QueryFn]:
         "sessionize_stream": q_sessionize_stream,
         "crawl_fetch_log": q_crawl_fetch_log,
         "lda_topics": q_lda_topics,
-        "media_resize": q_media_resize,
-        "media_audio": q_media_audio,
-        "media_frames": q_media_frames,
-        "media_video": q_media_video,
-        "media_jpeg": q_media_jpeg,
         "word_segment": q_word_segment,
         "robots_parse": q_robots_parse,
         "incremental_dedup": q_incremental_dedup,
         "dedup_centrality": q_dedup_centrality,
-        "media_container_meta": q_media_container_meta,
         "link_hits": q_link_hits,
         # r5: OPIC + PageRank promoted rows-only → value-exact oracled
         # (unrolled fixed-iteration DuckDB twins, graphalgo.*_sql)

@@ -7,7 +7,7 @@ out. The reference scraper has no archive layer at all (it fetches and
 immediately parses, CrawlPaperTuoiTre.py fetch loop); this follows the
 public WARC/1.0 spec (https://iipc.github.io/warc-specifications/).
 
-Three tiers, same split as the media stack:
+Three tiers:
 
 - ``warc_record`` / ``warc_record_sql`` — pure-codegen record builder:
   one concat expression per page, Content-Length = UTF-8 octet length
@@ -27,8 +27,8 @@ Three tiers, same split as the media stack:
 Scale shape: one row per archive body in, explode/iterate per record
 out — archives are the unit of parallelism exactly as Common Crawl
 shards them (~1 GB gzipped each); no shuffle is needed until the caller
-aggregates. The stream parser's memory is one archive per Arrow batch
-row, the same batch-bounded contract as operators/multimodal.py.
+aggregates. The stream parser holds one Arrow batch of archives (one
+archive per row) in memory at a time.
 """
 
 from __future__ import annotations
