@@ -329,6 +329,35 @@ def test_quality_empty_text_guard(spark):
         assert r["q"] is not None and not math.isnan(r["q"])
 
 
+def test_sniff_mime_container_aware(spark):
+    """ADVICE r3: RIFF sniffs by form type (WAVE vs AVI vs WEBP), mp4 by
+    the 'ftyp' brand at offset 5, not one box-size value."""
+    from web_scraper_spark.operators.multimodal import sniff_mime
+
+    rows = [
+        (1, b"RIFF\x24\x00\x00\x00WAVEfmt "),           # real WAV
+        (2, b"RIFF\x24\x00\x00\x00AVI LIST"),            # AVI, not audio
+        (3, b"RIFF\x24\x00\x00\x00WEBPVP8 "),            # WebP, not audio
+        (4, b"RIFF\x24\x00\x00\x00XXXX????"),            # unknown RIFF
+        (5, b"\x00\x00\x00\x18ftypisom\x00\x00"),        # classic mp4
+        (6, b"\x00\x00\x00\x20ftypmp42\x00\x00"),        # other box size: still mp4
+        (7, b"\x89PNG\r\n\x1a\n...."),
+        (8, b"plain text bytes"),
+    ]
+    df = spark.createDataFrame(rows, "media_id bigint, payload binary")
+    got = {r["media_id"]: r["sniffed_mime"] for r in sniff_mime(df).collect()}
+    assert got == {
+        1: "audio/wav",
+        2: "video/x-msvideo",
+        3: "image/webp",
+        4: "application/x-riff",
+        5: "video/mp4",
+        6: "video/mp4",
+        7: "image/png",
+        8: "application/octet-stream",
+    }
+
+
 # ---------------------------------------------------------------------------
 # cohort_retention (weekly cohort matrix)
 # ---------------------------------------------------------------------------

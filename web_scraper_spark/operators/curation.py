@@ -335,7 +335,8 @@ def stratified_sample(
     aggregate over ≤|langs| keys; the scalar N and the quota table are
     broadcast back (broadcast-scalar crossJoin — the repo-sanctioned
     pattern); ranking is a window partitioned by lang (never
-    single-partition; stratum skew is bounded by the stratum count). Only
+    single-partition; stratum skew is bounded by the stratum count, and a
+    hotter stratum would salt through operators/skew.py). Only
     (doc_id, lang, source, hash) ever shuffles — no text movement.
     """
     w = weights or MIX_WEIGHTS

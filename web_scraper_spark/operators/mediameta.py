@@ -1,8 +1,8 @@
 """Container-level metadata for mp4 (ISO BMFF) and mp3 (MPEG audio).
 
 The two formats whose SAMPLE decode genuinely needs ffmpeg-class codecs
-(H.264 entropy decode, MDCT filterbanks) stay NotImplementedError in
-operators/multimodal.py — but their CONTAINER structure is plain public
+(H.264 entropy decode, MDCT filterbanks) are not decoded anywhere in
+this package — but their CONTAINER structure is plain public
 spec (ISO/IEC 14496-12 box grammar; the MPEG-1/2 audio frame header of
 ISO/IEC 11172-3 §2.4.1.3), and a 100 TB media-curation pipeline needs
 exactly this tier: duration / codec / dimensions / bitrate triage
