@@ -306,17 +306,6 @@ def test_ivf_probe_from_persisted_index(spark, sf_dir, tmp_path):
     assert {(r["query_id"], r["neighbor_id"], r["rank"]) for r in got.collect()} == expect
 
 
-def test_grain_k_schedule():
-    from web_scraper_spark.operators.topics import grain_k
-
-    assert grain_k("month", 5) == 10
-    assert grain_k("month", 15) == 15
-    assert grain_k("month", 28) == 20
-    assert grain_k("week") == 10
-    assert grain_k("quarter") == 35
-    assert grain_k("year") == 40
-
-
 def test_kg_build_merge_semantics(spark):
     from web_scraper_spark.pipeline.kg import build_edges, build_nodes
 

@@ -84,32 +84,6 @@ def test_frontier_canon_native_for_percent_free(spark):
     assert keyed.filter(F.col("url_canon").isNull()).count() == 0
 
 
-def test_salted_join_equals_plain_join_under_skew(spark):
-    """salted_join must be result-identical to the plain join while
-    spreading a 90%-hot key over `salt` shuffle sub-keys."""
-    from web_scraper_spark.operators.skew import salted_join
-
-    n = 20000
-    fact = spark.range(n).select(
-        F.when(F.col("id") % 10 < 9, F.lit("hot")).otherwise(
-            F.concat(F.lit("k"), (F.col("id") % 100).cast("string"))
-        ).alias("k"),
-        F.col("id").alias("v"),
-    )
-    dim = spark.createDataFrame(
-        [("hot", 1.0)] + [(f"k{i}", float(i)) for i in range(100)], "k string, w double"
-    )
-    for how in ("inner", "left"):
-        got = salted_join(fact, dim, on=["k"], salt=8, how=how)
-        plan = _plan(got)
-        assert "_salt" in plan  # the shuffle key carries the salt
-        want = fact.join(dim, on=["k"], how=how)
-        assert got.count() == want.count()
-        g = got.groupBy("k").agg(F.sum("v").alias("sv"), F.sum("w").alias("sw"))
-        w = want.groupBy("k").agg(F.sum("v").alias("sv"), F.sum("w").alias("sw"))
-        assert {tuple(r) for r in g.collect()} == {tuple(r) for r in w.collect()}
-
-
 def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
     """Co-bucketed writes make the fact-fact join shuffle-free: the SMJ
     reads matching buckets directly — no Exchange on either side. This is

@@ -91,47 +91,6 @@ def test_relative_time_forms(spark):
     assert got[3] == datetime(2025, 12, 1, 8, 0)
 
 
-def test_jdbc_roundtrip_pushdown_and_batch_insert(spark):
-    """S5/S6/S7 over a REAL JDBC engine (the Derby jars Spark ships):
-    batch insert, predicate-pushdown scan, partitioned parallel read,
-    append, and overwrite refresh."""
-    from web_scraper_spark.sources.jdbc import (
-        DERBY_DRIVER,
-        derby_memory_url,
-        jdbc_scan,
-        jdbc_write,
-    )
-
-    url = derby_memory_url("srcs_t1")
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 5).alias("grp"), (F.col("id") * 2.5).alias("val")
-    )
-    # S6: batch insert (creates the table)
-    jdbc_write(df, url, "items", mode="overwrite", batchsize=16, driver=DERBY_DRIVER)
-
-    # S5: predicate scan — the filter must push into the remote engine
-    scan = jdbc_scan(spark, url, "items", driver=DERBY_DRIVER).filter("grp = 2")
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "grp" in plan
-    assert scan.count() == 20
-
-    # partitioned parallel read (the distributed read_sql)
-    par = jdbc_scan(
-        spark, url, "items", driver=DERBY_DRIVER,
-        partition_column="id", num_partitions=4, lower_bound=0, upper_bound=100,
-    )
-    assert par.rdd.getNumPartitions() == 4
-    assert par.count() == 100
-
-    # S6 append grows the table
-    jdbc_write(df.limit(10), url, "items", mode="append", driver=DERBY_DRIVER)
-    assert jdbc_scan(spark, url, "items", driver=DERBY_DRIVER).count() == 110
-
-    # S7 delete-then-insert refresh
-    jdbc_write(df.limit(7), url, "items", mode="overwrite", driver=DERBY_DRIVER)
-    assert jdbc_scan(spark, url, "items", driver=DERBY_DRIVER).count() == 7
-
-
 # ---------------------------------------------------------------------------
 # Day-partitioned pages store (Iceberg days(warc_ts) analogue)
 # ---------------------------------------------------------------------------

@@ -9,9 +9,13 @@ bitmaps into the previous table (frontier/state.py). Membership testing
 is bucket-cogrouped — a task gets one bucket's candidates plus that one
 bucket's bitmap; the full bloom state never transits the driver or any
 single task. At 10^10 URLs with 4096 buckets and 4 MiB bitmaps this is
-~16 GiB of state total (vs ~1 TB of seen table) — the point of the
-filter is that the *probably unseen* frontier majority never pays the
-seen-table anti-join shuffle:
+~16 GiB of state total (vs ~1 TB of seen table). The split spares only
+the probe side: the *definitely new* majority skips the exact anti-join,
+so only maybe-seen rows are shuffled to meet the seen table. The seen
+table itself is still shuffled in full — it is read from
+``partitionBy("bucket")`` directories, which give Spark no partitioning
+it can reuse, so the plan puts ``Exchange hashpartitioning(bucket,
+url_hash)`` above the seen FileScan:
 
     candidates --bloom--> definitely-new ----------------------\\
                 \\--maybe-seen--> anti-join vs seen (exact) ----- union

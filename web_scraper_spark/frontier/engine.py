@@ -2,8 +2,9 @@
 
 Each round is one declarative DataFrame plan, committed atomically:
 
-    frontier ⟕̸ seen (Bloom pre-filter + bucketed anti-join)   [O1: dedup
-        → robots filter (broadcast)                            before fetch]
+    frontier ⟕̸ seen (Bloom pre-filter + anti-join on          [O1: dedup
+        (bucket, url_hash); the seen side is shuffled in full)  before fetch]
+        → robots filter (broadcast)
         → politeness selection (per-host budget window)
         → salted repartition (hot-host skew spread)
         → "fetch" (join against the stored pages table — the sandbox
@@ -45,7 +46,7 @@ from web_scraper_spark.frontier.politeness import priority_order, robots_filter,
 from web_scraper_spark.frontier.state import CrawlState, FETCH_LOG_SCHEMA, FRONTIER_SCHEMA
 from web_scraper_spark.functions.timeparse import parse_time_col
 from web_scraper_spark.html.udfs import parse_pages
-from web_scraper_spark.urls import url_hash, url_host, with_canon
+from web_scraper_spark.urls import url_bucket, url_hash, url_host, with_canon
 
 
 @dataclass
@@ -88,11 +89,6 @@ class CrawlConfig:
     health_min_evidence: int = 20
     health_suspend_rate: float = 0.5
     health_error_statuses: tuple = ("fetch_failed", "timeout", "http_5xx", "conn_refused")
-    # r5 — sitemap-seeded discovery (seed_frontier_from_sitemaps): keep
-    # only entries whose <lastmod> DATE == as_of's date (the daily-crawl
-    # analogue of F4's slug-date window; entries without a parseable
-    # lastmod are dropped). False seeds every listed URL.
-    sitemap_lastmod_window: bool = True
 
     def alpha_target_date(self):
         d = datetime.fromisoformat(self.as_of).date()
@@ -120,7 +116,7 @@ def _with_keys(df: DataFrame, n_buckets: int) -> DataFrame:
     return (
         with_canon(df, "url", "url_canon")
         .withColumn("url_hash", url_hash(F.col("url_canon")))
-        .withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int"))
+        .withColumn("bucket", url_bucket(F.col("url_hash"), n_buckets))
         .withColumn("host", url_host(F.col("url_canon")))
     )
 
@@ -160,8 +156,6 @@ def seed_frontier_from_sitemaps(
     discovery); ``<sitemapindex>`` rows are ignored here because the
     caller already materialized every leaf body (a live crawler fetches
     index children first — tiny metadata I/O, not a scale concern).
-    Under ``cfg.sitemap_lastmod_window`` only entries whose lastmod DATE
-    equals as_of's date survive (the daily-crawl analogue of F4).
 
     Scale shape: the parse is frontier/sitemap.py's pure-codegen explode
     (one row per ≤50 MB body fans to ≤50k entries), the dedup is one
@@ -177,13 +171,18 @@ def seed_frontier_from_sitemaps(
     src_pos_map = F.create_map(
         *[x for i, s in enumerate(cfg.sources_by_pos) for x in (F.lit(s), F.lit(i))]
     )
-    entries = sitemap_entries(bodies).where(F.col("kind") == "url")
-    if cfg.sitemap_lastmod_window:
-        as_of_date = datetime.fromisoformat(cfg.as_of).date()
-        entries = entries.where(
+    # keep only entries whose <lastmod> DATE == as_of's date (the
+    # daily-crawl analogue of F4's slug-date window); entries without a
+    # parseable lastmod are dropped
+    as_of_date = datetime.fromisoformat(cfg.as_of).date()
+    entries = (
+        sitemap_entries(bodies)
+        .where(F.col("kind") == "url")
+        .where(
             F.expr("try_to_date(substring(lastmod, 1, 10), 'yyyy-MM-dd')")
             == F.lit(as_of_date)
         )
+    )
     keyed = _with_keys(
         entries.select(
             F.col("loc").alias("url"), F.col("pos").alias("listing_pos")
@@ -485,9 +484,10 @@ class CrawlEngine:
         # F3 skip-but-don't-seal: only successful in-window articles and
         # successfully fetched hub pages (depth<2) enter the seen set
         sealed = log.filter(F.col("status") == "crawled")
+        canon_hash = url_hash(F.col("url_canon"))
         seen_delta = sealed.select(
-            F.xxhash64("url_canon").alias("url_hash"),
-            F.pmod(F.xxhash64("url_canon"), F.lit(cfg.n_buckets)).cast("int").alias("bucket"),
+            canon_hash.alias("url_hash"),
+            url_bucket(canon_hash, cfg.n_buckets).alias("bucket"),
             "url_canon",
             F.lit(k).alias("round"),
         )

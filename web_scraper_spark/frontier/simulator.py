@@ -103,15 +103,14 @@ def _sitemap_seed_entries(
                 continue
             for ent, ch in _ENTITIES:
                 loc = loc.replace(ent, ch)
-            if crawl_cfg.sitemap_lastmod_window:
-                lm = re.search(_FIELD_RES["lastmod"], block)
-                lastmod = lm.group(1).strip() if lm else ""
-                try:
-                    ok = datetime.strptime(lastmod[:10], "%Y-%m-%d").date() == as_of_date
-                except ValueError:
-                    ok = False
-                if not ok:
-                    continue
+            lm = re.search(_FIELD_RES["lastmod"], block)
+            lastmod = lm.group(1).strip() if lm else ""
+            try:
+                ok = datetime.strptime(lastmod[:10], "%Y-%m-%d").date() == as_of_date
+            except ValueError:
+                ok = False
+            if not ok:
+                continue
             source = loc.split("/")[2].split(".")[0]
             parsed.append((src_pos.get(source, 99), pos0 + 1, loc))
     entries: dict[str, SimEntry] = {}

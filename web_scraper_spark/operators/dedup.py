@@ -297,25 +297,6 @@ def containment_pairs_sql(
 # Tier 3 — MinHash signatures + LSH banding
 # ---------------------------------------------------------------------------
 
-def minhash_signatures(shingles: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
-    """(doc_id, mh0..mh{n-1}) — min over the seeded hash family per doc,
-    from the postings index (one groupBy shuffle, n aggs map-side
-    combined). Kept for when postings already exist; the ZERO-shuffle path
-    is :func:`minhash_signatures_arrays`."""
-    aggs = [
-        F.min(seeded_hash60(s, F.col("shingle"))).alias(f"mh{s}")
-        for s in range(n_hashes)
-    ]
-    return shingles.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_signatures_sql(shingles_cte: str, n_hashes: int = N_MINHASH) -> str:
-    cols = ", ".join(
-        f"min({seeded_hash60_sql(s, 'shingle')}) AS mh{s}" for s in range(n_hashes)
-    )
-    return f"WITH sh AS ({shingles_cte}) SELECT doc_id, {cols} FROM sh GROUP BY doc_id"
-
-
 # Universal-hash family for MinHash rehashing: mh_s(h) = (a_s*h_lo +
 # b_s*h_hi + c_s) mod P over the 60-bit base hash split into 30-bit halves.
 # Every product stays under 2^61 (BIGINT-safe in both engines); parameters
@@ -420,46 +401,6 @@ def minhash_signatures_arrays_sql(
     return (
         f"WITH base AS (SELECT {id_col} AS doc_id, {bh} AS bh FROM {table}) "
         f"SELECT doc_id, {', '.join(cols)} FROM base WHERE len(bh) > 0"
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    n_hashes: int = N_MINHASH,
-    n_bands: int = N_BANDS,
-    max_bucket: int = 64,
-) -> DataFrame:
-    """Band-bucket join: docs agreeing on a whole band become candidates.
-
-    Band key = md5 of the band's minhash values; the (band, key) inverted
-    index self-joins to pairs. `max_bucket` drops pathological buckets
-    (boilerplate clusters) — at 10^9 docs one 10^5-doc bucket would emit
-    5x10^9 pairs; those clusters are exact-dups and tier 1 already has them.
-    """
-    rows = n_hashes // n_bands
-    band_cols = []
-    for band in range(n_bands):
-        members = [F.col(f"mh{band * rows + r}") for r in range(rows)]
-        band_cols.append(
-            F.struct(
-                F.lit(band).alias("band"),
-                F.md5(F.concat_ws(",", *members)).alias("bkey"),
-            )
-        )
-    buckets = signatures.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("b")
-    ).select("doc_id", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey"))
-    w = Window.partitionBy("band", "bkey")
-    buckets = buckets.withColumn("bsize", F.count("*").over(w)).where(
-        F.col("bsize") <= max_bucket
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(b, on=["band", "bkey"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
     )
 
 
@@ -597,8 +538,6 @@ def minhash_lsh_pairs(
     # drops instead of living in the CacheManager for the session
     sk = sketch_docs(docs, id_col=id_col, text_col=text_col).localCheckpoint(eager=True)
     buckets = mins_band_buckets(sk)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("band", "bkey")
     buckets = buckets.withColumn("bsize", F.count("*").over(w)).where(F.col("bsize") <= 64)
     a_b, b_b = buckets.alias("a"), buckets.alias("b")

@@ -7,8 +7,6 @@ from the documents, and both queries over it are plain Column
 expressions — size, md5 content hash and md5-derived features are
 computed in the scan's codegen stage and never leave the JVM. Each has a
 DuckDB twin (``media_stats_sql``, ``queries.MEDIA_FEATURES_SQL``).
-``sniff_mime`` tags payloads with a MIME type from their leading magic
-bytes, also as one native expression.
 
 No payload is decoded: the reference scraper handles text only.
 """
@@ -17,17 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# magic-byte → mime sniff table (native CASE over the first payload bytes).
-# Container formats that need more than a prefix (RIFF form type, mp4
-# 'ftyp' brand) get dedicated rules in sniff_mime (ADVICE r3).
-_MAGIC = [
-    ("89504e47", "image/png"),
-    ("ffd8ff", "image/jpeg"),
-    ("47494638", "image/gif"),
-    ("59555634", "video/x-yuv4mpeg"),
-    ("49443303", "audio/mpeg"),
-]
 
 FEATURE_DIM = 8
 
@@ -52,31 +39,6 @@ def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("int").alias("width"),
             F.lit(None).cast("int").alias("height"),
         ).alias("meta"),
-    )
-
-
-def sniff_mime(media: DataFrame) -> DataFrame:
-    """Native magic-byte sniff — runs inside the scan's codegen stage.
-
-    Container-aware (ADVICE r3): RIFF is only audio/wav when the form
-    type at bytes 9-12 is 'WAVE' (AVI 'AVI ' and WebP 'WEBP' share the
-    RIFF magic and sniff to their own mimes); mp4 matches the 'ftyp'
-    brand at byte offset 5 rather than one specific box length."""
-    head = F.lower(F.hex(F.substring(F.col("payload"), 1, 4)))
-    form = F.lower(F.hex(F.substring(F.col("payload"), 9, 4)))  # RIFF form type
-    brand = F.lower(F.hex(F.substring(F.col("payload"), 5, 4)))  # mp4 box type
-    mime = F.lit("application/octet-stream")
-    for magic, m in reversed(_MAGIC):
-        mime = F.when(head.startswith(magic), F.lit(m)).otherwise(mime)
-    is_riff = head == "52494646"
-    return media.withColumn(
-        "sniffed_mime",
-        F.when(is_riff & (form == "57415645"), F.lit("audio/wav"))  # WAVE
-        .when(is_riff & (form == "41564920"), F.lit("video/x-msvideo"))  # 'AVI '
-        .when(is_riff & (form == "57454250"), F.lit("image/webp"))  # WEBP
-        .when(is_riff, F.lit("application/x-riff"))
-        .when(brand == "66747970", F.lit("video/mp4"))  # 'ftyp' at offset 5
-        .otherwise(mime),
     )
 
 

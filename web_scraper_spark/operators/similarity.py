@@ -686,7 +686,7 @@ def lsh_ann_pairs(
     The cross-join disappears: candidates only form inside (tbl, bucket)
     groups. Hot buckets (dense regions) are the skew case: a bucket of B
     vectors emits B(B-1)/2 candidates, so ``max_bucket`` drops degenerate
-    buckets entirely (same policy as dedup.lsh_candidate_pairs — an
+    buckets entirely (same policy as dedup.minhash_lsh_pairs — an
     over-dense bucket means the hyperplanes don't discriminate there, and
     another table usually recovers the pair). The SQL oracle twin applies
     the identical cap, keeping the driver check value-exact.

@@ -103,33 +103,6 @@ def topic_labels(doc_topics: DataFrame, topic_keywords: DataFrame) -> DataFrame:
     return doc_topics.join(F.broadcast(top2), "topic").select("doc_id", "topic", "topic_name")
 
 
-def grain_k(grain: str, day_of_month: int | None = None) -> int:
-    """The reference's topic-count schedule (ConnectAndSave.py:203-208,
-    353, 508, 642): month scales k with how far into the month the data
-    goes (10 → 15 → 20), week 10, quarter 35, year 40."""
-    if grain == "month":
-        d = day_of_month or 31
-        return 10 if d <= 10 else (15 if d <= 20 else 20)
-    return {"week": 10, "quarter": 35, "year": 40}[grain]
-
-
-def fit_topics_by_grain(
-    docs: DataFrame,
-    grain: str,
-    grain_start,
-    grain_end,
-    ts_col: str = "publish_ts",
-    seed: int = 42,
-) -> tuple[DataFrame, DataFrame]:
-    """One parameterized run replaces the reference's four near-identical
-    run_lda_model* functions (ConnectAndSave.py:160,316,451,606): filter
-    the grain's time slice (partition-pruning predicate at scale), pick k
-    by the grain schedule, fit."""
-    sliced = docs.where(F.col(ts_col).between(grain_start, grain_end))
-    day = getattr(grain_end, "day", None)
-    return fit_topics(sliced, k=grain_k(grain, day), seed=seed)
-
-
 def lda_doc_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """queries() entry: deterministic doc→topic assignment with labels."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -1,24 +1,17 @@
-"""Article preprocess stage (SURVEY.md E2 / ConnectAndSave.py:31-108).
-
-The reference's pandas chain — clean (X2), timestamp parse (X3/X4), dropna
-(F7), date parts (X5), title+content concat (X7), tokenize+stopword strip
-(X8), keyword split (X14) — as one declarative plan. Everything except the
-Vietnamese word-segmenter is native Catalyst; the segmenter (ViTokenizer,
-ConnectAndSave.py:82) is an optional import inside a pandas_udf with a
-whitespace fallback, so the plan is identical with or without the library.
+"""Article text clean (SURVEY.md X9).
 
 X9, the 10-step text-clean pipeline (preprocessing_extract_entity.py:
 36-118), is :func:`deep_clean` — 9 steps native regexp_replace chain, NFC
-normalization as the one Arrow UDF (P4).
+normalization as the one Arrow UDF (P4). The rest of the reference's E2
+stage-1 chain (ConnectAndSave.py:31-108) lives where the registry uses
+it: tokenization in operators/text.py, time parsing in
+functions/timeparse.py, the keyword split in queries.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from web_scraper_spark.functions.timeparse import parse_time_col
-from web_scraper_spark.operators.text import EN_STOPWORDS
 
 
 def deep_clean(col: Column, nfc: bool = False) -> Column:
@@ -76,65 +69,3 @@ def _nfc_udf():
 
         _nfc_cache = pandas_udf(nfc, StringType())
     return _nfc_cache
-
-
-_segment_cache = None
-
-
-def _segment_udf():
-    """ViTokenizer word segmentation (X8) as a series→series Arrow UDF;
-    whitespace fallback when pyvi is absent (this container)."""
-    global _segment_cache
-    if _segment_cache is None:
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
-
-        def seg(s: pd.Series) -> pd.Series:
-            try:
-                from pyvi import ViTokenizer  # optional; not in container
-
-                return s.map(lambda x: ViTokenizer.tokenize(x) if x else x)
-            except ImportError:
-                return s
-
-        _segment_cache = pandas_udf(seg, StringType())
-    return _segment_cache
-
-
-def tokenize(col: Column, segment: bool = False) -> Column:
-    """X8: lower → strip punct → (segment) → split → stopword strip.
-    Stopword drop is array_except with a broadcast literal array."""
-    c = F.lower(col)
-    c = F.regexp_replace(c, r"[^\w\s]", " ")
-    if segment:
-        c = _segment_udf()(c)
-    c = F.regexp_replace(F.trim(c), r"\s+", " ")
-    tok = F.when(F.length(c) == 0, F.array().cast("array<string>")).otherwise(F.split(c, " "))
-    stop = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    return F.array_except(tok, stop)
-
-
-def split_keywords(col: Column) -> Column:
-    """X14 (ConnectAndSave.py:139-150): comma-split, trim+lower each,
-    drop '', 'null', 'nan' — transform + filter HOFs, no UDF."""
-    arr = F.transform(F.split(col, ","), lambda x: F.lower(F.trim(x)))
-    return F.filter(arr, lambda x: (x != "") & (x != "null") & (x != "nan"))
-
-
-def preprocess_articles(raw: DataFrame) -> DataFrame:
-    """E2 stage-1 over a crawled fetch_log-shaped frame
-    (source, url, category_name, keyword, time_str, title, content):
-    the engine twin of preprocess_and_save (ConnectAndSave.py:31-108)."""
-    ts = parse_time_col(F.col("source"), F.col("time_str"))
-    full = F.concat_ws(" ", F.col("title"), F.col("content"))
-    return (
-        raw.withColumn("publish_ts", ts)
-        .na.drop(subset=["publish_ts"])  # F7
-        .withColumn("year", F.year("publish_ts"))   # X5
-        .withColumn("month", F.month("publish_ts"))
-        .withColumn("day", F.dayofmonth("publish_ts"))
-        .withColumn("keywords", split_keywords(F.col("keyword")))  # X14
-        .withColumn("full_text", full)  # X7
-        .withColumn("tokens", tokenize(full))  # X8
-    )

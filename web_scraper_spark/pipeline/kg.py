@@ -5,10 +5,8 @@ The reference streams CSV chunks through per-row Cypher MERGE batches
 DataFrames — nodes(node_id, label, props...) and edges(src, dst,
 edge_type, props...) — where Cypher MERGE semantics are exactly
 ``dropDuplicates`` on the natural key (S8): idempotent re-runs produce the
-same graph, and writes partition by label/edge_type (A12) so downstream
-bulk loaders (neo4j-admin import, GraphFrames) consume one clean file set
-per type. Chunked-write checkpointing (S10) is subsumed by the engine's
-snapshot committer (frontier/state.py): a partition is the chunk.
+same graph. No sink is wired: the registry's ``kg_graph`` query reports
+the per-label and per-edge-type cardinalities of the two frames.
 """
 
 from __future__ import annotations
@@ -96,9 +94,3 @@ def build_edges(articles: DataFrame, entities: DataFrame, relations: DataFrame |
     # here both sides derive from the same frames so it is definitionally true
     return deduped
 
-
-def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
-    """Bulk-load layout: one directory per label/edge_type (A12 grouping,
-    O7 chunking = partitions)."""
-    nodes.write.mode("overwrite").partitionBy("label").parquet(f"{out_dir}/nodes")
-    edges.write.mode("overwrite").partitionBy("edge_type").parquet(f"{out_dir}/edges")

@@ -53,8 +53,8 @@ from web_scraper_spark.operators import sketch as sko
 from web_scraper_spark.operators import similarity as sim
 from web_scraper_spark.urls import canon_url_sql
 from web_scraper_spark.operators.text import (
-    BPE_TOKEN_RE,
     bpe_token_count,
+    bpe_token_count_sql,
     cjk_ratio,
     cjk_ratio_sql,
     clean_text,
@@ -108,7 +108,7 @@ TOKEN_STATS_SQL = f"""
     SELECT lang,
            count(*) AS n_docs,
            sum(len({tokens_sql('text')}))::BIGINT AS total_ws_tokens,
-           sum({"len(regexp_extract_all(text, '" + BPE_TOKEN_RE + "'))::BIGINT"})::BIGINT AS total_bpe_tokens,
+           sum({bpe_token_count_sql('text')})::BIGINT AS total_bpe_tokens,
            round(avg(len({tokens_sql('text')})), 4) AS avg_ws_tokens
     FROM documents GROUP BY lang
 """

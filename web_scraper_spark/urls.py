@@ -138,6 +138,11 @@ def url_hash(col: Column) -> Column:
     return F.xxhash64(col)
 
 
+def url_bucket(hash_col: Column, n_buckets: int) -> Column:
+    """Seen-set bucket of a :func:`url_hash` value: ``pmod(hash, n)``."""
+    return F.pmod(hash_col, F.lit(n_buckets)).cast("int")
+
+
 def host_py(url: str) -> str:
     m = _URL_RE.match(url or "")
     if not m:
