@@ -135,6 +135,34 @@ def test_jaccard_stop_shingle_cap(spark):
     assert all(a < 100 and b < 100 for a, b in uncapped - capped)
 
 
+def test_posting_pairs_hand_case(spark):
+    """The df cap is inclusive (a key held by exactly max_df entities
+    stays, max_df + 1 goes), a two-column key is one key, max_df=None
+    keeps every key, and n_common counts shared keys exactly, a < b."""
+    def pairs(df, key, max_df):
+        out = dd.posting_pairs(df, key, "ent", max_df)
+        assert out.columns == ["a", "b", "n_common"]
+        return {(r["a"], r["b"]): r["n_common"] for r in out.collect()}
+
+    one = spark.createDataFrame(
+        [("k2", 1), ("k2", 2)]
+        + [("k3", e) for e in (3, 1, 2)]  # exactly max_df = 3 holders
+        + [("k4", e) for e in (4, 3, 2, 1)],  # max_df + 1 holders
+        "key string, ent bigint",
+    )
+    assert pairs(one, "key", 3) == {(1, 2): 2, (1, 3): 1, (2, 3): 1}
+    assert pairs(one, "key", None) == {
+        (1, 2): 3, (1, 3): 2, (2, 3): 2, (1, 4): 1, (2, 4): 1, (3, 4): 1,
+    }
+    # (0, x) and (1, x) are different keys, though they share a bkey
+    two = spark.createDataFrame(
+        [(0, "x", 2), (0, "x", 1), (1, "x", 1), (1, "x", 2), (1, "x", 3)],
+        "band int, bkey string, ent bigint",
+    )
+    assert pairs(two, ["band", "bkey"], None) == {(1, 2): 2, (1, 3): 1, (2, 3): 1}
+    assert pairs(two, ["band", "bkey"], 2) == {(1, 2): 1}
+
+
 def test_lsh_ann_bucket_cap(spark):
     """A degenerate bucket (many identical vectors) is dropped by
     max_bucket instead of emitting B(B-1)/2 candidates."""

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from web_scraper_spark.pipeline.entities import (
@@ -12,7 +11,6 @@ from web_scraper_spark.pipeline.entities import (
     tag_tokens,
 )
 from web_scraper_spark.pipeline.relations import (
-    DEFAULT_VOCAB,
     classify_sentences,
     extract_relations,
 )

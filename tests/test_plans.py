@@ -84,6 +84,32 @@ def test_frontier_canon_native_for_percent_free(spark):
     assert keyed.filter(F.col("url_canon").isNull()).count() == 0
 
 
+def test_posting_pairs_cap_and_self_join_share_one_exchange(spark):
+    """posting_pairs takes df from a window over the key, so ONE
+    hashpartitioning(key) exchange feeds the df cap and the self-join;
+    the join's other side is a ReusedExchange of it, not a second
+    shuffle. Checked on the final adaptive plan, after execution."""
+    import re
+
+    postings = spark.createDataFrame(
+        [(k % 7, e) for e in range(40) for k in range(e % 5, e % 5 + 3)],
+        "pkey int, ent bigint",
+    )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
+        pairs = dd.posting_pairs(postings, "pkey", "ent", max_df=20)
+        pairs.collect()
+        plan = _plan(pairs).split("== Initial Plan ==")[0]
+        assert "SortMergeJoin" in plan and "Window" in plan
+        assert len(re.findall(r"\+- Exchange hashpartitioning\(pkey#", plan)) == 1, plan
+        assert len(re.findall(
+            r"ReusedExchange \[[^\]]*\], Exchange hashpartitioning\(pkey#", plan
+        )) == 1, plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
     """Co-bucketed writes make the fact-fact join shuffle-free: the SMJ
     reads matching buckets directly — no Exchange on either side. This is

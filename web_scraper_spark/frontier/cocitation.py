@@ -24,8 +24,9 @@ Plan shape at 100 TB: one distinct on (src, dst), then a src-partitioned
 rank window. The window does NOT ride the distinct's shuffle: that one is
 hash-partitioned on (src, dst), so Catalyst inserts a second exchange on
 src, with a partial top-``fanout_cap`` limit per src before it so at most
-the cap per src and input partition crosses it. The self-join reuses that
-src exchange on both sides (no exchange of its own), then one
+the cap per src and input partition crosses it. The self-join
+(``dedup.posting_pairs`` with no df cap) reads that src exchange on both
+sides, the second as a ReusedExchange, then one
 map-side-combined count on the pair key. Only (src, dst) string pairs
 ever shuffle.
 """
@@ -34,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from web_scraper_spark.operators.dedup import posting_pairs
 
 FANOUT_CAP = 64  # per-source outdegree cap before pair formation
 MIN_COMMON = 2  # report pairs co-cited by at least this many sources
@@ -60,16 +63,11 @@ def co_citation(
         .where(F.col("_rn") <= fanout_cap)
         .drop("_rn")
     )
-    a = ranked.alias("a")
-    b = ranked.alias("b")
-    pairs = a.join(b, on="src").where(F.col("a.dst") < F.col("b.dst"))
-    return (
-        pairs.groupBy(
-            F.col("a.dst").alias("url_a"), F.col("b.dst").alias("url_b")
-        )
-        .agg(F.count("*").cast("bigint").alias("n_common_srcs"))
-        .where(F.col("n_common_srcs") >= min_common)
-    )
+    return posting_pairs(ranked, "src", "dst").select(
+        F.col("a").alias("url_a"),
+        F.col("b").alias("url_b"),
+        F.col("n_common").alias("n_common_srcs"),
+    ).where(F.col("n_common_srcs") >= min_common)
 
 
 def bib_coupling(

@@ -9,16 +9,19 @@ reference crawls three fixed news hosts and never needs this
 frontier-hygiene operator.
 
 ``mirror_pairs`` computes exact path-set Jaccard between host pairs via
-the inverted-index shape — never a host×host crossJoin:
+the inverted-index shape of ``dedup.posting_pairs`` — never a host×host
+crossJoin:
 
 1. distinct ``(host, path)`` — one shuffle;
-2. per-path host postings; paths on more than ``max_hosts_per_path``
-   hosts are dropped (navigational boilerplate paths like ``/`` or
-   ``/index.html`` appear everywhere and carry no mirror signal — the
-   same non-discriminative-key cap as LSH bucket caps, and it bounds the
+2. per-path host postings, shuffled on path; paths on more than
+   ``max_hosts_per_path`` hosts are dropped by a hosts-per-path count
+   window (navigational boilerplate paths like ``/`` or ``/index.html``
+   appear everywhere and carry no mirror signal — the same
+   non-discriminative-key cap as LSH bucket caps, and it bounds the
    self-join fan-out to cap² per path);
-3. pair intersection counts from a self-join ON path (both sides arrive
-   partitioned by path from step 2 — co-partitioned, no extra exchange);
+3. pair intersection counts from a self-join ON path: both sides read
+   step 2's path exchange, the second as a ReusedExchange, then one
+   shuffle on the host pair for the count;
 4. per-host set sizes joined back; ``J = inter / (|A| + |B| − inter)``
    (exact integer counts; the division of two small exact integers is
    bit-identical across engines).
@@ -31,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from web_scraper_spark.operators.dedup import _with_set_sizes, posting_pairs
 
 MIRROR_TAU = 0.5
 MAX_HOSTS_PER_PATH = 100
@@ -48,36 +53,16 @@ def mirror_pairs(
         F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1).alias("host"),
         F.regexp_replace(F.col("url"), r"^[a-z]+://[^/]+", "").alias("path"),
     ).distinct()
-    sizes = hp.groupBy("host").agg(F.count("*").cast("bigint").alias("n"))
-    keep = (
-        hp.groupBy("path")
-        .agg(F.count("*").alias("hosts_on_path"))
-        .where(F.col("hosts_on_path") <= max_hosts_per_path)
-        .select("path")
+    inter = posting_pairs(hp, "path", "host", max_hosts_per_path)
+    out = _with_set_sizes(inter, hp, "host").select(
+        F.col("a").alias("host_a"),
+        F.col("b").alias("host_b"),
+        F.col("n_common").alias("inter"),
+        "n_a",
+        "n_b",
     )
-    discr = hp.join(keep, "path")
-    a = discr.select(F.col("path"), F.col("host").alias("host_a"))
-    b = discr.select(F.col("path"), F.col("host").alias("host_b"))
-    inter = (
-        a.join(b, "path")
-        .where(F.col("host_a") < F.col("host_b"))
-        .groupBy("host_a", "host_b")
-        .agg(F.count("*").cast("bigint").alias("inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("host", "host_a"), "host_a")
-        .withColumnRenamed("n", "n_a")
-        .join(sizes.withColumnRenamed("host", "host_b"), "host_b")
-        .withColumnRenamed("n", "n_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6
-            ),
-        )
-        .where(F.col("jaccard") >= tau)
-    )
-    return out.select("host_a", "host_b", "inter", "n_a", "n_b", "jaccard")
+    jaccard = F.round(F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6)
+    return out.withColumn("jaccard", jaccard).where(F.col("jaccard") >= tau)
 
 
 def mirror_pairs_sql(

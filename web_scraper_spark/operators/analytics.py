@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from web_scraper_spark.operators.dedup import posting_pairs
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -348,19 +350,14 @@ def valid_entity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sentence_entity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5 + A6 (combinations(entities, 2) per sentence,
-    relation_extraction.py:260-286): unordered co-occurrence pairs via a
-    self-join on the exploded distinct (doc, token) index — the inverted-
-    index join shape, same as dedup.jaccard_pairs. Top pairs by support."""
+    relation_extraction.py:260-286): unordered co-occurrence pairs via
+    dedup.posting_pairs over the distinct (doc, token) index, doc as the
+    key and no cap. Top pairs by support."""
     docs = load(spark, sf_dir, "documents")
     tok = _doc_tokens(docs).distinct()
-    a, b = tok.alias("a"), tok.alias("b")
-    return (
-        a.join(b, on="doc_id")
-        .where(F.col("a.token") < F.col("b.token"))
-        .groupBy(F.col("a.token").alias("e1"), F.col("b.token").alias("e2"))
-        .agg(F.count("*").alias("support"))
-        .where(F.col("support") >= 100)
-    )
+    return posting_pairs(tok, "doc_id", "token").select(
+        F.col("a").alias("e1"), F.col("b").alias("e2"), F.col("n_common").alias("support")
+    ).where(F.col("support") >= 100)
 
 
 def stopword_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:

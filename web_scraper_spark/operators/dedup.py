@@ -132,6 +132,43 @@ def doc_shingles_sql(table: str = "documents", id_col: str = "doc_id", text_col:
     """
 
 
+def posting_pairs(
+    postings: DataFrame, key: str | list[str], ent: str, max_df: int | None = None
+) -> DataFrame:
+    """(a, b, n_common): entity pairs a < b and the number of posting keys
+    they share — token blocking with block purging (SparkER, EDBT 2019).
+
+    ``postings`` holds distinct (key..., ent) rows. Keys held by more than
+    ``max_df`` entities are dropped before the self-join, since a key with
+    L holders emits L(L-1)/2 join rows; ``None`` keeps every key. df is a
+    ``count(*) over partitionBy(key)`` window, so the cap and the self-join
+    share one exchange on ``key``: the other join side is a ReusedExchange
+    of it.
+    """
+    keys = [key] if isinstance(key, str) else list(key)
+    p = postings.select(*keys, ent)
+    if max_df is not None:
+        df = F.count("*").over(Window.partitionBy(*keys))
+        p = p.withColumn("_df", df).where(F.col("_df") <= max_df).drop("_df")
+    a = p.withColumnRenamed(ent, "a")
+    b = p.withColumnRenamed(ent, "b")
+    return (
+        a.join(b, keys)
+        .where(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("n_common"))
+    )
+
+
+def _with_set_sizes(pairs: DataFrame, postings: DataFrame, ent: str) -> DataFrame:
+    """Joins each side's posting count in ``postings`` (the set size, taken
+    before any max_df prune) onto posting_pairs output as n_a and n_b."""
+    sizes = postings.groupBy(ent).agg(F.count("*").alias("n"))
+    return pairs.join(
+        sizes.select(F.col(ent).alias("a"), F.col("n").alias("n_a")), "a"
+    ).join(sizes.select(F.col(ent).alias("b"), F.col("n").alias("n_b")), "b")
+
+
 # ---------------------------------------------------------------------------
 # Tier 4 — exact n-gram Jaccard via inverted index (also the LSH verifier)
 # ---------------------------------------------------------------------------
@@ -148,45 +185,24 @@ def jaccard_pairs(shingles: DataFrame, tau: float = 0.4, max_df: int = 1000) -> 
     lost are those whose remaining shared shingles can't reach tau. The
     SQL oracle twin applies the identical cap.
     """
-    # the postings frame is referenced four times (set sizes, df counts,
-    # both self-join sides) — materialize it once or the tokenize+shingle
+    # the postings frame is referenced twice (set sizes and posting
+    # pairs) — materialize it once or the tokenize+shingle
     # scan reruns per reference (CLAUDE.md projection-collapse invariant).
     # localCheckpoint, not cache(): its storage is RDD-scoped and freed by
     # the ContextCleaner when the returned pairs frame is dropped, instead
     # of leaking a CacheManager entry per call for the session lifetime.
     shingles = shingles.localCheckpoint(eager=True)
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    rare = (
-        shingles.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= max_df)
-        .select("shingle")
+    pairs = _with_set_sizes(
+        posting_pairs(shingles, "shingle", "doc_id", max_df), shingles, "doc_id"
     )
-    pruned = shingles.join(rare, on="shingle", how="left_semi")
-    a = pruned.alias("a")
-    b = pruned.alias("b")
-    common = (
-        a.join(b, on="shingle")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_common"))
+    jaccard = F.round(
+        F.col("n_common").cast("double")
+        / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
+        6,
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= tau)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return pairs.select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), jaccard.alias("jaccard")
+    ).where(F.col("jaccard") >= tau)
 
 
 def jaccard_pairs_sql(shingles_cte: str, tau: float = 0.4, max_df: int = 1000) -> str:
@@ -234,37 +250,17 @@ def containment_pairs(
     and containment of documents").
     """
     shingles = shingles.localCheckpoint(eager=True)
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    rare = (
-        shingles.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= max_df)
-        .select("shingle")
+    pairs = _with_set_sizes(
+        posting_pairs(shingles, "shingle", "doc_id", max_df), shingles, "doc_id"
     )
-    pruned = shingles.join(rare, on="shingle", how="left_semi")
-    a = pruned.alias("a")
-    b = pruned.alias("b")
-    common = (
-        a.join(b, on="shingle")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     cab = F.round(F.col("n_common").cast("double") / F.col("n_a"), 6)
     cba = F.round(F.col("n_common").cast("double") / F.col("n_b"), 6)
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            cab.alias("cont_a_in_b"),
-            cba.alias("cont_b_in_a"),
-        )
-        .where(F.greatest("cont_a_in_b", "cont_b_in_a") >= tau)
-    )
+    return pairs.select(
+        F.col("a").alias("doc_a"),
+        F.col("b").alias("doc_b"),
+        cab.alias("cont_a_in_b"),
+        cba.alias("cont_b_in_a"),
+    ).where(F.greatest("cont_a_in_b", "cont_b_in_a") >= tau)
 
 
 def containment_pairs_sql(
@@ -537,33 +533,24 @@ def minhash_lsh_pairs(
     # first action, and its storage is RDD-scoped — freed when the frame
     # drops instead of living in the CacheManager for the session
     sk = sketch_docs(docs, id_col=id_col, text_col=text_col).localCheckpoint(eager=True)
-    buckets = mins_band_buckets(sk)
-    w = Window.partitionBy("band", "bkey")
-    buckets = buckets.withColumn("bsize", F.count("*").over(w)).where(F.col("bsize") <= 64)
-    a_b, b_b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a_b.join(b_b, on=["band", "bkey"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    a = sk.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("sa"))
-    b = sk.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("sb"))
+    # a pair sharing any band bucket (n_common >= 1) is a candidate
+    cand = posting_pairs(mins_band_buckets(sk), ["band", "bkey"], "doc_id", 64)
+    a = sk.select(F.col("doc_id").alias("a"), F.col("shset").alias("sa"))
+    b = sk.select(F.col("doc_id").alias("b"), F.col("shset").alias("sb"))
+    return _shset_jaccard(cand.join(a, "a").join(b, "b"), tau)
+
+
+def _shset_jaccard(pairs: DataFrame, tau: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) rows with jaccard >= tau, exact over the
+    hashed shingle sets ``sa`` and ``sb`` that ``pairs`` (a, b) carries."""
     n_common = F.size(F.array_intersect("sa", "sb"))
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                n_common.cast("double")
-                / (F.size("sa") + F.size("sb") - n_common).cast("double"),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= tau)
-        .select("doc_a", "doc_b", "jaccard")
+    jaccard = F.round(
+        n_common.cast("double") / (F.size("sa") + F.size("sb") - n_common).cast("double"),
+        6,
     )
+    return pairs.select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), jaccard.alias("jaccard")
+    ).where(F.col("jaccard") >= tau)
 
 
 def minhash_lsh_pairs_sql(table: str = "documents", tau: float = 0.4) -> str:
@@ -621,42 +608,16 @@ def delta_near_dups(
     touched = db.select("band", "bkey").distinct()
     # all corpus members of delta-touched buckets (pruned BEFORE any join)
     cb = mins_band_buckets(corpus_sk).join(touched, on=["band", "bkey"], how="left_semi")
-    c_n = cb.groupBy("band", "bkey").agg(F.count("*").alias("c_n"))
-    d_n = db.groupBy("band", "bkey").agg(F.count("*").alias("d_n"))
-    ok = (
-        d_n.join(c_n, on=["band", "bkey"], how="left")
-        .where(F.col("d_n") + F.coalesce(F.col("c_n"), F.lit(0)) <= max_bucket)
-        .select("band", "bkey")
+    cand = posting_pairs(cb.unionByName(db), ["band", "bkey"], "doc_id", max_bucket)
+    # the delta flag rides the set lookup; filtering on it after the count
+    # is exact, since it is a property of the pair, not of the bucket
+    sets = corpus_sk.select("doc_id", "shset", F.lit(False).alias("d")).unionByName(
+        dsk.select("doc_id", "shset", F.lit(True).alias("d"))
     )
-    db_ok = db.join(ok, on=["band", "bkey"], how="left_semi")
-    cand_dc = db_ok.alias("d").join(cb.alias("c"), on=["band", "bkey"]).select(
-        F.least("d.doc_id", "c.doc_id").alias("doc_a"),
-        F.greatest("d.doc_id", "c.doc_id").alias("doc_b"),
-    )
-    cand_dd = (
-        db_ok.alias("a")
-        .join(db_ok.alias("b"), on=["band", "bkey"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
-    cand = cand_dc.unionByName(cand_dd).distinct()
-    sets = corpus_sk.select("doc_id", "shset").unionByName(dsk.select("doc_id", "shset"))
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("sa"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("sb"))
-    n_common = F.size(F.array_intersect("sa", "sb"))
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                n_common.cast("double")
-                / (F.size("sa") + F.size("sb") - n_common).cast("double"),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= tau)
-        .select("doc_a", "doc_b", "jaccard")
+    a = sets.select(F.col("doc_id").alias("a"), F.col("shset").alias("sa"), F.col("d").alias("da"))
+    b = sets.select(F.col("doc_id").alias("b"), F.col("shset").alias("sb"), F.col("d").alias("db"))
+    return _shset_jaccard(
+        cand.join(a, "a").join(b, "b").where(F.col("da") | F.col("db")), tau
     )
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from web_scraper_spark.operators.dedup import cosine_expr, cosine_sql
+from web_scraper_spark.operators.dedup import cosine_expr, cosine_sql, posting_pairs
 
 N_PLANES = 8
 
@@ -691,19 +691,9 @@ def lsh_ann_pairs(
     another table usually recovers the pair). The SQL oracle twin applies
     the identical cap, keeping the driver check value-exact.
     """
-    buckets = lsh_buckets(emb, n_tables)
-    w = Window.partitionBy("tbl", "bucket")
-    buckets = buckets.withColumn("bsize", F.count("*").over(w)).where(
-        F.col("bsize") <= max_bucket
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    cand = (
-        a.join(b, on=["tbl", "bucket"])
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    cand = posting_pairs(
+        lsh_buckets(emb, n_tables), ["tbl", "bucket"], "vec_id", max_bucket
+    ).select(F.col("a").alias("vec_a"), F.col("b").alias("vec_b"))
     ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").cast("array<double>").alias("ea"))
     eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").cast("array<double>").alias("eb"))
     return (

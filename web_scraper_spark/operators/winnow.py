@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from web_scraper_spark.operators.dedup import _fan_out, posting_pairs
 from web_scraper_spark.operators.hashing import hash60, hash60_sql
 from web_scraper_spark.operators.text import (
     clean_text,
@@ -99,8 +100,6 @@ def _selected(docs: DataFrame, w: int) -> DataFrame:
     selecting them (every position selects exactly one fp, so
     sum(n_sel) per doc = gram count). One explode of 8-byte hashes, one
     doc_id shuffle serving window + distinct."""
-    from web_scraper_spark.operators.dedup import _fan_out
-
     grams = _fan_out(docs.select("doc_id", "text")).select(
         "doc_id", F.posexplode(_gram_hashes(F.col("text"))).alias("pos", "h")
     )
@@ -129,23 +128,18 @@ def winnow_overlap_pairs(
     deterministic, oracle-mirrored, and it bounds any fingerprint's pair
     contribution at max_fp_df²/2). Returns (doc_a, doc_b, n_shared_fps).
     """
-    # eager localCheckpoint: sel feeds BOTH the df filter and the join
+    # eager localCheckpoint: sel feeds both sides of the self-join
     sel = _selected(docs, w).drop("n_sel").localCheckpoint(eager=True)
-    df_t = sel.groupBy("fp").agg(F.count("*").alias("fp_df"))
-    kept = sel.join(
-        df_t.where(F.col("fp_df") <= max_fp_df).select("fp"), on="fp"
-    )
-    a = kept.alias("a")
-    b = kept.alias("b")
-    return (
-        a.join(b, on="fp")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").cast("bigint").alias("n_shared_fps"))
-        .where(F.col("n_shared_fps") >= min_shared)
-    )
+    return _shared_at_least(posting_pairs(sel, "fp", "doc_id", max_fp_df), min_shared)
+
+
+def _shared_at_least(pairs: DataFrame, min_shared: int) -> DataFrame:
+    """posting_pairs rows as (doc_a, doc_b, n_shared_fps), >= min_shared."""
+    return pairs.select(
+        F.col("a").alias("doc_a"),
+        F.col("b").alias("doc_b"),
+        F.col("n_common").alias("n_shared_fps"),
+    ).where(F.col("n_shared_fps") >= min_shared)
 
 
 def build_winnow_index(docs: DataFrame, w: int = WINDOW_W) -> DataFrame:
@@ -189,28 +183,18 @@ def winnow_overlap_incremental(
     touched = dsel.select("fp").distinct()
     corpus_touched = corpus_fps.join(touched, on="fp", how="leftsemi")
     union_touched = corpus_touched.unionByName(dsel).distinct()
-    df_t = union_touched.groupBy("fp").agg(F.count("*").alias("fp_df"))
-    kept = union_touched.join(
-        df_t.where(F.col("fp_df") <= max_fp_df).select("fp"), on="fp"
+    pairs = posting_pairs(union_touched, "fp", "doc_id", max_fp_df)
+    # keep pairs with a delta member; filtering after the count is exact,
+    # since delta membership is a property of the pair, not of the fp
+    delta_ids = dsel.select("doc_id").distinct()
+    da = delta_ids.select(F.col("doc_id").alias("a"), F.lit(True).alias("da"))
+    db = delta_ids.select(F.col("doc_id").alias("b"), F.lit(True).alias("db"))
+    pairs = (
+        pairs.join(da, "a", "left")
+        .join(db, "b", "left")
+        .where(F.col("da").isNotNull() | F.col("db").isNotNull())
     )
-    delta_ids = dsel.select("doc_id").distinct().withColumn(
-        "_is_delta", F.lit(True)
-    )
-    marked = kept.join(delta_ids, on="doc_id", how="left").select(
-        "doc_id", "fp", F.coalesce("_is_delta", F.lit(False)).alias("_d")
-    )
-    a = marked.alias("a")
-    b = marked.alias("b")
-    return (
-        a.join(b, on="fp")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .where(F.col("a._d") | F.col("b._d"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").cast("bigint").alias("n_shared_fps"))
-        .where(F.col("n_shared_fps") >= min_shared)
-    )
+    return _shared_at_least(pairs, min_shared)
 
 
 def winnow_overlap_pairs_sql(

@@ -1,8 +1,9 @@
 """Article text clean (SURVEY.md X9).
 
 X9, the 10-step text-clean pipeline (preprocessing_extract_entity.py:
-36-118), is :func:`deep_clean` — 9 steps native regexp_replace chain, NFC
-normalization as the one Arrow UDF (P4). The rest of the reference's E2
+36-118), is :func:`deep_clean` — its 9 regexp steps as one native
+regexp_replace chain. The NFC step is left out: synthetic corpora are
+already NFC. The rest of the reference's E2
 stage-1 chain (ConnectAndSave.py:31-108) lives where the registry uses
 it: tokenization in operators/text.py, time parsing in
 functions/timeparse.py, the keyword split in queries.py.
@@ -14,15 +15,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def deep_clean(col: Column, nfc: bool = False) -> Column:
+def deep_clean(col: Column) -> Column:
     """X9: URL/email/phone strip, repeated-char collapse, specials strip,
     lone-number drop, whitespace normalize (preprocessing_extract_entity.py:
-    36-118 step order preserved). NFC (step 1) runs as an Arrow UDF only
-    when requested — synthetic corpora are already NFC."""
-    c = col
-    if nfc:
-        c = _nfc_udf()(c)
-    c = F.regexp_replace(c, r"https?://\S+|www\.\S+", " ")       # URLs
+    36-118 step order preserved; the NFC step 1 is a no-op on synthetic
+    corpora, which are already NFC)."""
+    c = F.regexp_replace(col, r"https?://\S+|www\.\S+", " ")       # URLs
     c = F.regexp_replace(c, r"\S+@\S+\.\S+", " ")                # emails
     c = F.regexp_replace(c, r"\b\+?\d[\d .-]{7,}\d\b", " ")      # phone runs
     c = F.regexp_replace(c, r"(.)\1{2,}", "$1$1")                # aaa+ → aa
@@ -33,7 +31,7 @@ def deep_clean(col: Column, nfc: bool = False) -> Column:
 
 
 def deep_clean_sql(expr: str) -> str:
-    """DuckDB twin of deep_clean(nfc=False). RE2 has no backreferences, so
+    """DuckDB twin of :func:`deep_clean`. RE2 has no backreferences, so
     the generic ``(.)\\1{2,}`` repeated-char collapse is expanded into
     per-character rules over [a-z0-9] and the kept punctuation — identical
     output for any input whose 3+-runs are in that alphabet (uppercase is
@@ -51,21 +49,3 @@ def deep_clean_sql(expr: str) -> str:
     c = f"regexp_replace({c}, '[\\n\\r\\t]', ' ', 'g')"
     return f"regexp_replace(trim({c}), '\\s+', ' ', 'g')"
 
-
-_nfc_cache = None
-
-
-def _nfc_udf():
-    global _nfc_cache
-    if _nfc_cache is None:
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
-
-        def nfc(s: pd.Series) -> pd.Series:
-            import unicodedata
-
-            return s.map(lambda x: unicodedata.normalize("NFC", x) if x is not None else None)
-
-        _nfc_cache = pandas_udf(nfc, StringType())
-    return _nfc_cache
